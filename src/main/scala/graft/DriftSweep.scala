@@ -13,7 +13,7 @@ package graft
   * per scale — exactly Verify's layout, once per scale.
   *
   * One JVM across scales is safe: every stored artifact's tag embeds
-  * the corpus dir ([[graft.ops.BandIndex.tag]]), so scales never read
+  * the corpus dir ([[graft.ops.BucketedTable.tag]]), so scales never read
   * each other's tables, and the shared-cache families are released
   * after each scale's last consumer by Verify's own hygiene, then the
   * whole SQL cache is cleared between scales.

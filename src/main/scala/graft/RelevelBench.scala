@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   * Fractions {1%, 10%, 50%, 100%}, median of 3 reps each on a fresh
   * identical pre-state. Emits ONE JSON line (the Bench convention);
   * the committed record is RELEVEL_r18.json, and the resulting policy
-  * threshold lives at [[graft.ops.LexIndex.RelevelPartialMaxFraction]]
+  * threshold lives at [[graft.ops.BucketedTable.RelevelPartialMaxFraction]]
   * with the SCALE.md table explaining the why.
   */
 object RelevelBench {
@@ -42,7 +42,7 @@ object RelevelBench {
     import spark.implicits._
     import org.apache.spark.sql.functions._
 
-    val tag = ops.BandIndex.tag(sfDir, "relevelbench")
+    val tag = ops.BucketedTable.tag(sfDir, "relevelbench")
     val docs = Tables.par(spark, sfDir, "documents")
     def fresh(): Unit = {
       ops.LexIndex.tables(tag).foreach(t =>

@@ -228,7 +228,7 @@ object Pipeline {
     * phase). One report row per artifact; silent caps become metrics.
     *
     * Tag contract: artifacts are tagged EXACTLY as their consumers
-    * derive them for a corpus directory — `BandIndex.tag(outDir,
+    * derive them for a corpus directory — `BucketedTable.tag(outDir,
     * "full")` (the ingest-time stream probe's whole-corpus index) and
     * `SpanSet.tag(outDir)` (the span queries' artifact) — so the phase
     * pre-pays the build that queries and streaming probes against
@@ -268,7 +268,7 @@ object Pipeline {
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val band = a.bandIndexTables.map { t =>
-      val tag = graft.ops.BandIndex.tag(outDir, "full")
+      val tag = graft.ops.BucketedTable.tag(outDir, "full")
       val ((skB, skR), secs) = timed {
         graft.ops.BandIndex.buildOrLoad(spark,
           spark.read.parquet(s"$outDir/$t.parquet"), tag, log)
@@ -678,7 +678,7 @@ object Pipeline {
       Report.ArtifactResult(table, kind, detail, 0L, 0L, secs)
     }
     val band = {
-      val tag = BandIndex.tag(outDir, "full")
+      val tag = BucketedTable.tag(outDir, "full")
       if (!BandIndex.exists(spark, tag)) Nil else {
         val ((sh, bd), secs) = timed(BandIndex.delete(spark, docIds, tag))
         Seq(row(tag, "delete_band_index",
@@ -768,7 +768,7 @@ object Pipeline {
     * (r17 verdict missing #2; `RELEVEL_r18.json` + SCALE.md §"Pricing
     * the re-level knob"): [[graft.ops.LexIndex.relevel]] reads each
     * index's touched-partition fraction and takes the bounded partial
-    * path below [[graft.ops.LexIndex.RelevelPartialMaxFraction]], the
+    * path below [[graft.ops.BucketedTable.RelevelPartialMaxFraction]], the
     * wholesale re-level at or above it. One report row per index
     * documents WHICH path was taken and WHY (the fraction and the
     * threshold) — the policy must be visible in the migration report,
@@ -784,7 +784,7 @@ object Pipeline {
     val (path, frac, parts) = f
     val secs = (System.nanoTime() - t0) / 1e9
     val detail = f"tag=$tag path=$path touched_fraction=$frac%.4f " +
-      f"threshold=${graft.ops.LexIndex.RelevelPartialMaxFraction}%.2f " +
+      f"threshold=${graft.ops.BucketedTable.RelevelPartialMaxFraction}%.2f " +
       s"parts_rewritten=$parts"
     log.info(tag, kind, detail)
     Seq(Report.ArtifactResult(tag, kind, detail, 0L, 0L, secs))
@@ -817,7 +817,7 @@ object Pipeline {
     import graft.ops._
     val lex = relevelLexIndexes(spark, outDir, lexTables, log)
     val band = {
-      val tag = BandIndex.tag(outDir, "full")
+      val tag = BucketedTable.tag(outDir, "full")
       if (!BandIndex.exists(spark, tag)) Nil
       else relevelRow(log, tag, "relevel_band_index",
         BandIndex.relevel(spark, tag))

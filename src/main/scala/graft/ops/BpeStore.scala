@@ -3,19 +3,16 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Stored learned-tokenizer artifact — the EIGHTH stored family (band
-  * index, span sets, chunk store, IVF, PQ, containment index, media
-  * sigs, now BPE): the merge table and the (distinct word →
-  * segmentation) map that every encode-side consumer replays,
+/** Stored learned-tokenizer artifact: the merge table and the
+  * (distinct word → segmentation) map that every encode-side consumer replays,
   * materialized as tables instead of re-derived per session. A training
   * run SHIPS its tokenizer: the merge rules are the model's text
   * interface, and the segmentation map is the corpus-scale encode
   * pass's broadcast side — both belong on disk with the other learned
-  * state, not in a session memo (r12 verdict #2: the 10-round merge
-  * replay was the bench's 5th most expensive query when every session
-  * re-learned it; stored, the steady-state encode face is a scan).
-  *
-  * Two tables per corpus snapshot:
+  * state, not in a session memo (the 10-round merge replay was the
+  * bench's 5th most expensive query when every session re-learned it;
+  * stored, the steady-state encode face is a scan). Lifecycle and
+  * layout rules: [[BucketedTable]].
   *
   *   - `<tag>_bpemerges` (merge_rank, lhs, rhs, pair_count) — tiny
   *     (one row per learned merge), plain table; rank order IS the
@@ -45,26 +42,28 @@ import org.apache.spark.sql.functions._
 object BpeStore {
 
   /** Budget-embedding tag (the IvfIndex/PqStore convention): a budget
-    * change builds a NEW artifact — r14's merge-budget sweep reads
+    * change builds a NEW artifact — the merge-budget sweep reads
     * several geometry tags side by side with zero cross-tag reads
     * (BpeStoreSpec pins the isolation).
     */
   def tag(dir: String): String = tag(dir, BpeQueries.NumMerges)
 
   def tag(dir: String, merges: Int): String =
-    BandIndex.tag(dir, s"bpe$merges")
+    BucketedTable.tag(dir, s"bpe$merges")
 
   private def mergesT(tag: String) = s"${tag}_bpemerges"
-  private def segsT(tag: String) = s"${tag}_bpesegs"
+  private def segs(tag: String) = BucketedTable.Table(s"${tag}_bpesegs",
+    Seq("word"), Seq("word", "cnt", "syms"))
+  private def segsT(tag: String) = segs(tag).name
 
-  /** Every table this family stores for `tag` (r16 ADVICE #2: reset
-    * paths reuse this so they cannot drift from the layout).
+  /** Every table this family stores for `tag` (reset paths reuse this so
+    * they cannot drift from the layout).
     */
   def tables(tag: String): Seq[String] = Seq(mergesT(tag), segsT(tag))
 
   /** Derived bucket count this tag was built with (report-row metric). */
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, segsT(tag))
+    BucketedTable.bucketsOf(spark, segsT(tag))
 
   /** Materialize (or reuse, if already cataloged this session) the
     * tokenizer artifact for `docs` under `tag`. Returns
@@ -75,22 +74,16 @@ object BpeStore {
                   numMerges: Int = BpeQueries.NumMerges
                  ): (DataFrame, DataFrame) = {
     val (mT, sT) = (mergesT(tag), segsT(tag))
-    // both-tables gate (MediaSigStore convention): any partial state —
-    // crash between writes or an external drop of either table —
-    // self-heals by rebuilding.
-    if (!(spark.catalog.tableExists(mT) && spark.catalog.tableExists(sT))) {
-      BandIndex.dropStaleLocations(spark, Seq(mT, sT))
+    BucketedTable.buildIfAbsent(spark,
+        spark.catalog.tableExists(mT) && spark.catalog.tableExists(sT),
+        tables(tag)) {
       val (merges, vFinal) = BpeQueries.learnAndApplyDocs(docs, numMerges)
       try {
         import spark.implicits._
         merges.toDF("merge_rank", "lhs", "rhs", "pair_count")
           .write.mode(SaveMode.Overwrite).saveAsTable(mT)
-        val buckets = BandIndex.derivedBuckets(vFinal.count())
-        // repartition-by-bucket-key: one file per bucket (r19 §6)
-        vFinal.repartition(buckets, col("word"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "word").sortBy("word")
-          .saveAsTable(sT)
+        BucketedTable.write(vFinal, segs(tag),
+          BucketedTable.derivedBuckets(vFinal.count()))
       } finally { vFinal.unpersist(); Checkpoints.free(vFinal) }
       // Build-time audit: the numbers that decide whether the merge
       // table is worth shipping (q_bpe_encode's metrics, as a log line).
@@ -131,16 +124,12 @@ object BpeStore {
     * class doc for why tokenizer "refresh" is [[rebuild]].
     */
   def append(spark: SparkSession, newDocs: DataFrame, tag: String): Unit = {
-    val (mT, sT) = (mergesT(tag), segsT(tag))
-    require(spark.catalog.tableExists(mT) && spark.catalog.tableExists(sT),
-      s"append target $tag does not exist — buildOrLoad first")
+    BucketedTable.requireBuilt(spark, "append", tag, mergesT(tag), segsT(tag))
     val unseen = BpeQueries.vocabOf(newDocs)
-      .join(spark.table(sT).select("word"), Seq("word"), "left_anti")
-    val segs = BpeQueries.applyMerges(unseen, mergeList(spark, tag))
-    try {
-      segs.select(col("word"), col("cnt"), col("syms"))
-        .write.insertInto(sT)
-    } finally { segs.unpersist(); Checkpoints.free(segs) }
+      .join(spark.table(segsT(tag)).select("word"), Seq("word"), "left_anti")
+    val rows = BpeQueries.applyMerges(unseen, mergeList(spark, tag))
+    try BucketedTable.insert(spark, rows, segs(tag))
+    finally { rows.unpersist(); Checkpoints.free(rows) }
   }
 
   /** Offline retrain: drop both tables and rebuild from the corpus —

@@ -1,16 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Stored chunk table — the fourth stored-artifact family (after
-  * [[BandIndex]], [[SpanSet]], [[IvfIndex]]): the chunk relation a
-  * RAG/embedding store maintains, materialized as a bucketed table
-  * instead of re-chunking the corpus per query (the r6 verdict's
-  * standing gap: `q_doc_chunk` and `q_chunk_dedup` each re-ran the
-  * chunker; an embedding pipeline runs it ONCE per doc, at ingest).
-  *
-  * One table per corpus snapshot:
+/** Stored chunk table: the chunk relation a RAG/embedding store
+  * maintains, materialized as a bucketed table instead of re-chunking
+  * the corpus per query (an embedding pipeline runs the chunker ONCE
+  * per doc, at ingest). Lifecycle and layout rules: [[BucketedTable]].
   *
   *   - `<tag>_chunks` (doc_id, chunk_idx, start_tok, n_chunk_tok,
   *     chunk_fp)  bucketed by chunk_fp
@@ -25,34 +21,30 @@ import org.apache.spark.sql.functions._
   * space, and paying its shuffle once at build is the same argument as
   * the span set's.
   *
-  * Maintenance mirrors the other families: [[append]] inserts an
-  * arriving batch's chunk rows (insertInto preserves the bucket spec;
-  * chunk rows are pure per-doc facts, so appends need no count
-  * reconciliation — the one family with NO staleness bound), and the
-  * bucket count derives from the chunk-row cardinality at build
-  * ([[BandIndex.derivedBuckets]]). Builds run once per (session,
-  * corpus snapshot) keyed by catalog presence.
+  * Chunk rows are pure per-doc facts, so this is the one family with NO
+  * staleness window: append-then-read and delete-then-read both equal a
+  * from-scratch build over the resulting corpus.
   */
 object ChunkStore {
 
-  def tag(dir: String): String = BandIndex.tag(dir, "chunks")
+  def tag(dir: String): String = BucketedTable.tag(dir, "chunks")
 
-  private def chunksT(tag: String) = s"${tag}_chunks"
+  private def chunks(tag: String) = BucketedTable.Table(s"${tag}_chunks",
+    Seq("chunk_fp"),
+    Seq("doc_id", "chunk_idx", "start_tok", "n_chunk_tok", "chunk_fp"))
 
-  /** Every table this family stores for `tag` (r16 ADVICE #2: reset
-    * paths reuse this so they cannot drift from the layout).
+  /** Every table this family stores for `tag` (reset paths reuse this so
+    * they cannot drift from the layout).
     */
-  def tables(tag: String): Seq[String] = Seq(chunksT(tag))
+  def tables(tag: String): Seq[String] = Seq(chunks(tag).name)
 
   /** Derived bucket count this tag was built with (report-row metric). */
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, chunksT(tag))
+    BucketedTable.bucketsOf(spark, chunks(tag).name)
 
-  /** Whether the stored table for `tag` is cataloged (the IvfIndex
-    * convention).
-    */
+  /** Whether the stored table for `tag` is cataloged. */
   def exists(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(chunksT(tag))
+    chunks(tag).cataloged(spark)
 
   /** Materialize (or reuse, if already cataloged this session) the
     * chunk table for `docs` (must carry doc_id + text). Returns the
@@ -60,27 +52,20 @@ object ChunkStore {
     */
   def buildOrLoad(spark: SparkSession, docs: DataFrame, tag: String,
                   log: graft.etl.MigrationLog = graft.etl.MigrationLog.silent,
-                  targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
+                  targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket
                  ): DataFrame = {
-    val cT = chunksT(tag)
-    if (!spark.catalog.tableExists(cT)) {
-      BandIndex.dropStaleLocations(spark, Seq(cT))
+    val cT = chunks(tag).name
+    BucketedTable.buildIfAbsent(spark, exists(spark, tag), tables(tag)) {
       // Persist so the sizing count and the write share one chunking
       // pass (the build's only corpus scan).
       val rows = PackingQueries.chunkRowsOf(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val n = rows.count()
-        val bk = BandIndex.derivedBuckets(n, targetRowsPerBucket)
-        // repartition-by-bucket-key: one file per bucket (the
-        // LexIndex.writePostings rationale, r19 §6)
-        rows.repartition(bk, col("chunk_fp"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(bk, "chunk_fp").sortBy("chunk_fp")
-          .saveAsTable(cT)
-        // Build-time audit (the families' convention): how much of the
-        // chunk space is already duplicated — the fraction of embedding
-        // spend dedup will save.
+        val bk = BucketedTable.derivedBuckets(n, targetRowsPerBucket)
+        BucketedTable.write(rows, chunks(tag), bk)
+        // Build-time audit: how much of the chunk space is already
+        // duplicated — the fraction of embedding spend dedup will save.
         val dup = spark.table(cT).groupBy("chunk_fp")
           .agg(count(lit(1)).as("nc"))
           .agg(count(lit(1)).as("n_fp"),
@@ -103,56 +88,27 @@ object ChunkStore {
     * Bucket-local agg off the stored scan.
     */
   def keepers(spark: SparkSession, tag: String): DataFrame =
-    spark.table(chunksT(tag))
+    spark.table(chunks(tag).name)
       .groupBy("chunk_fp")
       .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("k"))
       .select(col("chunk_fp"), col("k.doc_id").as("keeper_doc"),
         col("k.chunk_idx").as("keeper_idx"))
 
-  /** Daily-ingest maintenance: append `newDocs`' chunk rows (insertInto
-    * preserves the bucket spec). Chunk rows are per-doc facts — no
-    * cross-batch counts to reconcile, so append-then-read equals a
-    * from-scratch rebuild with no refresh step needed.
-    */
+  /** Daily-ingest maintenance: append `newDocs`' chunk rows. */
   def append(spark: SparkSession, newDocs: DataFrame, tag: String): Unit = {
-    val cT = chunksT(tag)
-    require(spark.catalog.tableExists(cT),
-      s"append target $tag does not exist — buildOrLoad first")
-    PackingQueries.chunkRowsOf(newDocs)
-      .select("doc_id", "chunk_idx", "start_tok", "n_chunk_tok", "chunk_fp")
-      .write.insertInto(cT)
+    BucketedTable.requireBuilt(spark, "append", tag, chunks(tag).name)
+    BucketedTable.insert(spark, PackingQueries.chunkRowsOf(newDocs), chunks(tag))
   }
 
-  /** Takedown maintenance (r15 verdict #1 — the missing lifecycle
-    * verb): remove every chunk row of `docIds` (a doc_id relation).
-    * Chunk rows are pure per-doc facts, so this family's delete has NO
-    * staleness window at all: post-delete reads equal a from-scratch
-    * build over the surviving corpus (ChunkStoreSpec differentials
-    * [[keepers]] — a keeper owned by a deleted doc re-elects to the
-    * surviving minimum automatically, since keepers is a read-path agg
-    * over stored rows). Anti-join rewrite preserving the bucket spec;
-    * the staged survivors are materialized (localCheckpoint) before the
-    * overwrite — the write plan must not scan its own target. Returns
-    * chunk rows removed.
+  /** Takedown maintenance: remove every chunk row of `docIds` (a doc_id
+    * relation). Post-delete reads equal a from-scratch build over the
+    * surviving corpus (ChunkStoreSpec differentials [[keepers]] — a
+    * keeper owned by a deleted doc re-elects to the surviving minimum
+    * automatically, since keepers is a read-path agg over stored rows).
+    * Returns chunk rows removed.
     */
   def delete(spark: SparkSession, docIds: DataFrame, tag: String): Long = {
-    val cT = chunksT(tag)
-    require(spark.catalog.tableExists(cT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
-    val t = spark.table(cT)
-    val removed = t.join(ids, Seq("doc_id"), "left_semi").count()
-    if (removed == 0L) return 0L
-    val buckets = BandIndex.bucketsOf(spark, cT)
-    val staged = t.join(ids, Seq("doc_id"), "left_anti")
-      .select("doc_id", "chunk_idx", "start_tok", "n_chunk_tok", "chunk_fp")
-      .localCheckpoint()
-    // no re-clustering (r19 §2.4): staged survivors come from a
-    // narrow anti-join of the bucketed scan — already bucket-aligned
-    staged.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "chunk_fp").sortBy("chunk_fp")
-      .saveAsTable(cT)
-    spark.catalog.refreshTable(cT)
-    removed
+    BucketedTable.requireBuilt(spark, "delete", tag, chunks(tag).name)
+    BucketedTable.deleteKeyed(spark, docIds, "doc_id", Seq(chunks(tag))).head
   }
 }

@@ -1,129 +1,77 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
-/** Stored containment index — the SIXTH stored artifact family (after
-  * band index, span set, IVF cells, chunk store, PQ store): the
-  * inverted word-3-gram index + per-doc n-gram arrays the incremental
-  * containment path (`q_containment_incremental`) and the streaming
-  * ingest probe ([[graft.streaming.CorpusStream.containmentProbe]])
-  * read, instead of re-deriving the standing corpus's n-grams per run.
-  *
-  * Two bucketed tables (plus a tiny ledger) per corpus snapshot:
+/** Stored containment index: the inverted word-3-gram index + per-doc
+  * n-gram arrays the incremental containment path
+  * (`q_containment_incremental`) and the streaming ingest probe
+  * ([[graft.streaming.CorpusStream.containmentProbe]]) read, instead of
+  * re-deriving the standing corpus's n-grams per run. Lifecycle and
+  * layout rules: [[BucketedTable]].
   *
   *   - `<tag>_cngrams` (g1, doc_id, na, df)   bucketed by g1,
-  *     partitioned by pb = pmod(hash(g1), nb) — the LexIndex pb
-  *     mirror: a g1's rows are hash-confined to one partition, so
-  *     df recomputed within a partition subset is EXACT for every
-  *     g1 it contains, which is what makes [[refreshCountsPartial]]
-  *     a bounded maintenance op (r16 verdict #4)
+  *     partition mirror pb
   *   - `<tag>_cdocs`   (doc_id, ng, na, oc)   bucketed by doc_id,
-  *     partitioned by pd = pmod(hash(doc_id), nb) — same idea at doc
-  *     grain, so the oc re-level rewrites only partitions holding
-  *     docs whose oc actually changed
-  *   - `<tag>_ctouched` (g1) — the touched-n-gram ledger [[append]]
-  *     and [[delete]] maintain (recorded BEFORE mutation, the
-  *     LexIndex crash-order), [[refreshCounts]]/[[refreshCountsPartial]]
-  *     reset
+  *     partition mirror pd — so the oc re-level rewrites only
+  *     partitions holding docs whose oc actually changed
+  *   - `<tag>_ctouched` (g1) — the touched-n-gram ledger
   *
   * `df` — each n-gram's standing document frequency — and `oc` — each
-  * doc's count of OVER-CAP n-grams — are PRECOMPUTED at build time, so
+  * doc's count of OVER-CAP n-grams — are precomputed at build time, so
   * the df-cap candidate restriction (`df <= cap`) is a pushed parquet
   * predicate on the posting scan and the support prefilter's
   * min(oc_a, oc_b) bound reads a stored column; recomputing either on
-  * the read path would shuffle the whole index per probe (the
-  * BandIndex `bsz` argument verbatim). Bucketing on the probe keys
-  * (g1 for the posting join, doc_id for the verify join) keeps the
-  * index sides scan-only — only the arriving batch shuffles.
-  *
-  * At 100 TB this is a daily-maintained table pair (append new docs'
-  * postings with batch-local df lower bounds, periodically
-  * [[refreshCounts]] to exact df/oc); here the build runs once per
-  * (session, corpus snapshot) keyed by catalog presence, like every
-  * other family.
+  * the read path would shuffle the whole index per probe. Bucketing on
+  * the probe keys (g1 for the posting join, doc_id for the verify join)
+  * keeps the index sides scan-only — only the arriving batch shuffles.
   */
 object ContainIndex {
 
-  /** Catalog tag for a corpus dir + role (delegates to the shared
-    * convention).
-    */
-  def tag(dir: String, role: String): String = BandIndex.tag(dir, role)
+  import BucketedTable.{Ledger, Table}
 
-  private def ngramT(tag: String) = s"${tag}_cngrams"
-  private def docT(tag: String) = s"${tag}_cdocs"
-  private def touchT(tag: String) = s"${tag}_ctouched"
+  /** Catalog tag for a corpus dir + role. */
+  def tag(dir: String, role: String): String = BucketedTable.tag(dir, role)
+
+  private def ngrams(tag: String) = Table(s"${tag}_cngrams", Seq("g1"),
+    Seq("g1", "doc_id", "na", "df"), Some("pb"))
+  private def docs(tag: String) = Table(s"${tag}_cdocs", Seq("doc_id"),
+    Seq("doc_id", "ng", "na", "oc"), Some("pd"))
+  private def ledger(tag: String) =
+    Ledger(s"${tag}_ctouched", new StructType().add("g1", StringType))
 
   /** Every table this family stores for `tag` — the one list reset
     * paths (q_takedown_audit) and drop helpers reuse so they cannot
-    * drift from the storage layout (r16 ADVICE #2).
+    * drift from the storage layout.
     */
   def tables(tag: String): Seq[String] =
-    Seq(ngramT(tag), docT(tag), touchT(tag))
+    Seq(ngrams(tag).name, docs(tag).name, ledger(tag).name)
 
   /** Drop every stored table of `tag` (catalog + files). */
   def dropAll(spark: SparkSession, tag: String): Unit = {
     tables(tag).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    BandIndex.dropStaleLocations(spark, tables(tag))
+    BucketedTable.dropStaleLocations(spark, tables(tag))
   }
 
-  /** pb/pd partition columns mirroring the bucket hash (the LexIndex
-    * withPb convention — see that scaladoc for why a bucketed table
-    * needs a partition mirror to be partially rewritable).
+  /** Postings of n-gram arrays (doc_id, ng) with df stamped (the
+    * skew-safe [[BandIndex.withKeyCount]], never a g1 window: the
+    * hottest g1 is a boilerplate n-gram, the exact key the df cap
+    * governs).
     */
-  private def withPg(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pb", expr(s"pmod(hash(g1), $nb)").cast("int"))
-  private def withPd(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pd", expr(s"pmod(hash(doc_id), $nb)").cast("int"))
+  private def postings(g: DataFrame): DataFrame =
+    BandIndex.withKeyCount(g.select(col("doc_id"), size(col("ng")).as("na"),
+      explode(col("ng")).as("g1")), Seq("g1"), "df")
 
-  // r19 (§6, the LexIndex.writePostings rationale): one file per
-  // bucket via bucket-key clustering; deletes pass false (§2.4)
-  private def writePostings(staged: DataFrame, nb: Int,
-                            table: String, cluster: Boolean = true): Unit = {
-    val rows = staged.select("g1", "doc_id", "na", "df", "pb")
-    (if (cluster) rows.repartition(nb, col("g1")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pb")
-      .bucketBy(nb, "g1").sortBy("g1")
-      .saveAsTable(table)
-  }
-
-  private def writeDocs(staged: DataFrame, nb: Int, table: String,
-                        cluster: Boolean = true): Unit = {
-    val rows = staged.select("doc_id", "ng", "na", "oc", "pd")
-    (if (cluster) rows.repartition(nb, col("doc_id")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pd")
-      .bucketBy(nb, "doc_id").sortBy("doc_id")
-      .saveAsTable(table)
-  }
-
-  /** Touched-n-gram ledger (the LexIndex pattern verbatim): recorded
-    * BEFORE the index mutates, so a crash between the two leaves only
-    * harmless extra ledger rows (a partial re-level of an already-exact
-    * partition is idempotent), never a stale n-gram the ledger missed.
+  /** Doc-array rows (doc_id, ng, na, oc): `oc` counts each doc's
+    * over-cap n-grams in `post`; docs whose n-grams are all rare get 0.
     */
-  private def ensureTouched(spark: SparkSession, tag: String): Unit = {
-    val tT = touchT(tag)
-    if (!spark.catalog.tableExists(tT)) {
-      BandIndex.dropStaleLocations(spark, Seq(tT))
-      import spark.implicits._
-      Seq.empty[String].toDF("g1")
-        .write.mode(SaveMode.Overwrite).saveAsTable(tT)
-    }
-  }
-
-  private def recordTouched(spark: SparkSession, tag: String,
-                            grams: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    grams.select(col("g1")).distinct().write.insertInto(touchT(tag))
-  }
-
-  private def clearTouched(spark: SparkSession, tag: String): Unit = {
-    import spark.implicits._
-    Seq.empty[String].toDF("g1")
-      .write.mode(SaveMode.Overwrite).saveAsTable(touchT(tag))
-    spark.catalog.refreshTable(touchT(tag))
+  private def docRows(g: DataFrame, post: DataFrame): DataFrame = {
+    val oc = post.filter(col("df") > DedupQueries.ContainDfCap)
+      .groupBy("doc_id").agg(count(lit(1)).as("oc"))
+    g.join(oc, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("ng"), size(col("ng")).as("na"),
+        coalesce(col("oc"), lit(0L)).as("oc"))
   }
 
   /** Materialize (or reuse, if already cataloged this session) the
@@ -132,139 +80,86 @@ object ContainIndex {
     */
   def buildOrLoad(spark: SparkSession, standingDocs: DataFrame,
                   tag: String,
-                  targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
+                  targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket
                  ): (DataFrame, DataFrame) = {
-    val ngT = ngramT(tag)
-    val dcT = docT(tag)
-    // Gate on BOTH tables (r10 ADVICE #3) AND on the r17 partition
-    // columns being present (the MediaSigStore schema-drift rule): a
-    // crash between the two saveAsTable calls, or a pre-pb vintage of
-    // the artifact, self-heals by rebuilding rather than breaking the
-    // partial re-level with no repair path.
-    // the SAME vintage-aware exists() the maintenance callers gate on
-    // (r17 ADVICE): pb/pd partition mirrors checked via catalog
-    // metadata, so the two predicates cannot disagree
-    val complete = exists(spark, tag)
-    if (!complete) {
-      Seq(ngT, dcT, touchT(tag)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-      BandIndex.dropStaleLocations(spark, Seq(ngT, dcT, touchT(tag)))
+    val (ngT, dcT) = (ngrams(tag), docs(tag))
+    BucketedTable.buildIfAbsent(spark, exists(spark, tag), tables(tag)) {
       val g = DedupQueries.ngramDocs(standingDocs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val inv = g.select(col("doc_id"), size(col("ng")).as("na"),
-          explode(col("ng")).as("g1"))
-        // df derived ONCE at build — never again on the read path (the
-        // bsz convention) — and via the skew-safe groupBy + join-back
-        // (BandIndex.withKeyCount), never a g1 window: the hottest g1
-        // is a boilerplate n-gram, the exact key the df cap governs
-        val post = BandIndex.withKeyCount(inv, Seq("g1"), "df")
+        // df derived once at build — never again on the read path
+        val post = postings(g)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val buckets =
-            BandIndex.derivedBuckets(post.count(), targetRowsPerBucket)
-          writePostings(withPg(post, buckets), buckets, ngT)
-          // per-doc over-cap count from the SAME df relation, joined
-          // back to the arrays; docs whose n-grams are all rare get 0
-          val oc = post.filter(col("df") > DedupQueries.ContainDfCap)
-            .groupBy("doc_id").agg(count(lit(1)).as("oc"))
-          writeDocs(withPd(
-            g.join(oc, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("ng"), size(col("ng")).as("na"),
-                coalesce(col("oc"), lit(0L)).as("oc")), buckets),
-            buckets, dcT)
-          // fresh build is exact everywhere — an empty touched ledger
-          ensureTouched(spark, tag)
+            BucketedTable.derivedBuckets(post.count(), targetRowsPerBucket)
+          BucketedTable.write(post, ngT, buckets)
+          BucketedTable.write(docRows(g, post), dcT, buckets)
+          ledger(tag).ensure(spark)
         } finally post.unpersist()
       } finally g.unpersist()
     }
-    (spark.table(ngT), spark.table(dcT))
+    (spark.table(ngT.name), spark.table(dcT.name))
   }
 
   /** Daily-ingest maintenance: append `newDocs`' postings and arrays.
     * Appended rows carry df counted WITHIN the batch — a lower bound on
     * the true frequency, which errs toward treating n-grams as rare:
     * recall-safe (extra candidates), cost-unsafe until the next
-    * [[refreshCounts]] — the BandIndex `bsz` staleness contract with
-    * the inequality pointing the same (safe) way.
+    * re-level — the BandIndex `bsz` staleness contract with the
+    * inequality pointing the same (safe) way.
     */
   def append(spark: SparkSession, newDocs: DataFrame, tag: String): Unit = {
-    val ngT = ngramT(tag)
-    val dcT = docT(tag)
-    require(spark.catalog.tableExists(ngT) && spark.catalog.tableExists(dcT),
-      s"append target $tag does not exist — buildOrLoad first")
-    val nb = BandIndex.bucketsOf(spark, ngT)
+    val (ngT, dcT) = (ngrams(tag), docs(tag))
+    BucketedTable.requireBuilt(spark, "append", tag, ngT.name, dcT.name)
     val g = DedupQueries.ngramDocs(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val inv = g.select(col("doc_id"), size(col("ng")).as("na"),
-        explode(col("ng")).as("g1"))
-      // ledger first (crash order: extra ledger rows are harmless,
-      // missed ones are not), then the postings
-      recordTouched(spark, tag, inv.select("g1"))
-      val post = BandIndex.withKeyCount(inv, Seq("g1"), "df")
-      withPg(post, nb).select("g1", "doc_id", "na", "df", "pb")
-        .write.insertInto(ngT)
-      val oc = post.filter(col("df") > DedupQueries.ContainDfCap)
-        .groupBy("doc_id").agg(count(lit(1)).as("oc"))
-      withPd(g.join(oc, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("ng"), size(col("ng")).as("na"),
-            coalesce(col("oc"), lit(0L)).as("oc")), nb)
-        .select("doc_id", "ng", "na", "oc", "pd")
-        .write.insertInto(dcT)
+      ledger(tag).record(spark, g.select(explode(col("ng")).as("g1")))
+      val post = postings(g)
+      BucketedTable.insert(spark, post, ngT)
+      BucketedTable.insert(spark, docRows(g, post), dcT)
     } finally g.unpersist()
   }
 
-  /** Periodic compaction: recompute exact df over the full stored
-    * posting relation and exact oc per doc, rewriting both tables with
-    * their bucket specs preserved (appends leave df/oc per-batch lower
-    * bounds). This is the full-table re-level; [[refreshCountsPartial]]
-    * is the bounded form that only rewrites partitions the ledger says
-    * are stale (r16 verdict #4).
+  /** Full re-level: recompute exact df over the full stored posting
+    * relation and exact oc per doc, rewriting both tables with their
+    * bucket specs preserved. [[refreshCountsPartial]] is the bounded
+    * form.
     */
   def refreshCounts(spark: SparkSession, tag: String): Unit = {
-    val ngT = ngramT(tag)
-    val dcT = docT(tag)
-    val buckets = BandIndex.bucketsOf(spark, ngT)
+    val (ngT, dcT) = (ngrams(tag), docs(tag))
+    val buckets = BucketedTable.bucketsOf(spark, ngT.name)
     val post = BandIndex.withKeyCount(
-        spark.table(ngT).select(col("g1"), col("doc_id"), col("na")),
+        spark.table(ngT.name).select(col("g1"), col("doc_id"), col("na")),
         Seq("g1"), "df")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val stagedNg = withPg(post, buckets)
-        .select("g1", "doc_id", "na", "df", "pb")
+      val stagedNg = ngT.rows(post, buckets)
         .localCheckpoint() // sever from the table being overwritten
       val oc = post.filter(col("df") > DedupQueries.ContainDfCap)
         .groupBy("doc_id").agg(count(lit(1)).as("oc"))
-      val stagedDc = withPd(spark.table(dcT).select("doc_id", "ng", "na")
+      val stagedDc = dcT.rows(spark.table(dcT.name).select("doc_id", "ng", "na")
           .join(oc, Seq("doc_id"), "left")
           .select(col("doc_id"), col("ng"), col("na"),
             coalesce(col("oc"), lit(0L)).as("oc")), buckets)
-        .select("doc_id", "ng", "na", "oc", "pd")
         .localCheckpoint()
-      writePostings(stagedNg, buckets, ngT)
-      writeDocs(stagedDc, buckets, dcT)
-      spark.catalog.refreshTable(ngT)
-      spark.catalog.refreshTable(dcT)
-      // everything is exact again — the ledger resets
-      clearTouched(spark, tag)
+      BucketedTable.write(stagedNg, ngT, buckets)
+      BucketedTable.write(stagedDc, dcT, buckets)
+      spark.catalog.refreshTable(ngT.name)
+      spark.catalog.refreshTable(dcT.name)
+      ledger(tag).clear(spark)
     } finally post.unpersist()
   }
 
-  /** BOUNDED re-level (r16 verdict #4 — the LexIndex
-    * [[LexIndex.refreshCountsPartial]] pattern applied to this family):
-    * re-level df for ONLY the posting partitions holding n-grams
-    * touched since the last exact level, then re-level oc for ONLY the
-    * doc partitions whose stored oc actually changed — leaving every
-    * other partition's files byte-identical on disk. At the family's
-    * advertised scale [[refreshCounts]] is an O(index) rewrite of BOTH
-    * tables; this does daily-batch-proportional posting work plus a
-    * scan-grade oc audit:
+  /** Bounded re-level: re-level df for ONLY the posting partitions
+    * holding n-grams touched since the last exact level (the
+    * [[BucketedTable.relevelPartitions]] shape, composed here because
+    * the ledger must only clear after BOTH legs), then re-level oc for
+    * ONLY the doc partitions whose stored oc actually changed:
     *
-    *   1. touched g1s → their partitions pb = pmod(hash(g1), nb); ONE
-    *      partition-pruned scan re-derives df exactly (a g1's rows are
-    *      hash-confined to its pb) and dynamic-overwrites exactly those
-    *      partitions (staged via localCheckpoint);
+    *   1. posting df over the touched partitions, exact (a g1's rows
+    *      are confined to its pb), dynamically overwritten;
     *   2. oc: exact per-doc over-cap counts from the NOW-EXACT stored
     *      df — `postings.filter(df > cap)` is a pushed predicate scan,
     *      and the count is a doc-grain groupBy (fine-grained keys, no
@@ -277,84 +172,54 @@ object ContainIndex {
     *   3. ledger reset.
     *
     * Equals [[refreshCounts]] exactly on both tables (ContainIndexSpec
-    * differential), and untouched partitions are not rewritten
-    * (byte-identical files — spec-pinned). Returns (posting partitions
-    * rewritten, doc partitions rewritten).
+    * differential), and untouched partitions are not rewritten.
+    * Returns (posting partitions rewritten, doc partitions rewritten).
     */
   def refreshCountsPartial(spark: SparkSession, tag: String): (Long, Long) = {
-    val ngT = ngramT(tag)
-    val dcT = docT(tag)
-    ensureTouched(spark, tag)
-    val nb = BandIndex.bucketsOf(spark, ngT)
-    val touchedPbs = spark.table(touchT(tag))
-      .select(expr(s"pmod(hash(g1), $nb)").cast("int").as("pb"))
-      .distinct().collect().map(_.getInt(0)).sorted.toSeq
+    val (ngT, dcT) = (ngrams(tag), docs(tag))
+    val touchedPbs = ledger(tag).touched(spark, ngT)
     if (touchedPbs.isEmpty) return (0L, 0L)
-    // 1. posting df re-level, partition-pruned (the
-    // BandIndex.relevelPartitions shape, inlined because leg 2 below
-    // is NOT that shape and the ledger must only clear after BOTH)
-    val stagedNg = withPg(BandIndex.withKeyCount(
-        spark.table(ngT).filter(col("pb").isin(touchedPbs: _*))
-          .select(col("g1"), col("doc_id"), col("na")),
-        Seq("g1"), "df"), nb)
-      .select("g1", "doc_id", "na", "df", "pb")
-      .localCheckpoint()
-    BandIndex.overwritePartitionsDynamic(spark, stagedNg, ngT)
-    // 2. oc re-level: exact over-cap counts off the now-exact df
-    val ocExact = spark.table(ngT)
+    val nb = BucketedTable.bucketsOf(spark, ngT.name)
+    BucketedTable.overwritePartitionsDynamic(spark, ngT.rows(
+        BandIndex.withKeyCount(spark.table(ngT.name)
+          .filter(col("pb").isin(touchedPbs: _*))
+          .select(col("g1"), col("doc_id"), col("na")), Seq("g1"), "df"), nb)
+      .localCheckpoint(), ngT.name)
+    val ocExact = spark.table(ngT.name)
       .filter(col("df") > DedupQueries.ContainDfCap)
       .groupBy("doc_id").agg(count(lit(1)).as("oc_x"))
-    val changedPds = spark.table(dcT).select("doc_id", "oc", "pd")
+    val changedPds = spark.table(dcT.name).select("doc_id", "oc", "pd")
       .join(ocExact, Seq("doc_id"), "left")
       .filter(col("oc") =!= coalesce(col("oc_x"), lit(0L)))
       .select(col("pd").cast("int"))
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
     if (changedPds.nonEmpty) {
-      val stagedDc = spark.table(dcT)
+      val stagedDc = spark.table(dcT.name)
         .filter(col("pd").isin(changedPds: _*))
         .select("doc_id", "ng", "na", "pd")
         .join(ocExact, Seq("doc_id"), "left")
         .select(col("doc_id"), col("ng"), col("na"),
           coalesce(col("oc_x"), lit(0L)).as("oc"), col("pd"))
         .localCheckpoint()
-      BandIndex.overwritePartitionsDynamic(spark, stagedDc, dcT)
+      BucketedTable.overwritePartitionsDynamic(spark, stagedDc, dcT.name)
     }
-    clearTouched(spark, tag)
+    ledger(tag).clear(spark)
     (touchedPbs.size.toLong, changedPds.size.toLong)
   }
 
-  /** The family's re-level POLICY verb (the LexIndex.relevel shape —
-    * threshold measured on the pattern family, RELEVEL_r18.json):
-    * partial below [[LexIndex.RelevelPartialMaxFraction]], full at
-    * complete cover. Returns (path, touched fraction, partitions
-    * rewritten — posting + doc partitions summed for the partial path).
+  /** The re-level policy verb ([[BucketedTable.relevel]]); the partial
+    * path reports posting + doc partitions summed.
     */
-  def relevel(spark: SparkSession, tag: String): (String, Double, Long) = {
-    val f = BandIndex.touchedFractionOf(spark, touchT(tag), ngramT(tag),
-      Seq("g1"))
-    if (f < LexIndex.RelevelPartialMaxFraction) {
-      val (ng, dc) = refreshCountsPartial(spark, tag)
-      ("partial", f, ng + dc)
-    } else {
-      refreshCounts(spark, tag)
-      ("full", f, BandIndex.bucketsOf(spark, ngramT(tag)).toLong)
-    }
-  }
+  def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
+    BucketedTable.relevel(spark, ledger(tag), ngrams(tag))(
+      { val (ng, dc) = refreshCountsPartial(spark, tag); ng + dc },
+      refreshCounts(spark, tag))
 
-  /** Ledger seeding for policy specs/benches — see
-    * [[LexIndex.seedTouchedForBench]]; production paths never call it.
-    */
-  private[graft] def seedTouchedForBench(spark: SparkSession, tag: String,
-                                         keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("g1")).distinct().write.insertInto(touchT(tag))
-  }
-
-  /** Takedown maintenance (r15 verdict #1, dual of [[append]]): remove
-    * every posting and doc-array row of `docIds`. A deleted doc can
-    * never be emitted as a candidate or verified as a match again —
-    * its postings AND its n-gram array are gone. Surviving counts go
-    * stale in the DUAL direction of append's batch-local lower bounds:
+  /** Takedown maintenance, dual of [[append]]: remove every posting and
+    * doc-array row of `docIds`. A deleted doc can never be emitted as a
+    * candidate or verified as a match again — its postings AND its
+    * n-gram array are gone. Surviving counts go stale in the DUAL
+    * direction of append's batch-local lower bounds:
     *   - posting `df` becomes a stale UPPER bound (it counted deleted
     *     docs), so the `df <= cap` candidate restriction may SKIP an
     *     n-gram deletion brought back under the cap — cost-safe but
@@ -364,44 +229,18 @@ object ContainIndex {
     *     prefilter's `bound − min(oca, ocb)` threshold drops — MORE
     *     candidates pass, recall-safe and cost-unsafe (same direction
     *     as append here: oc only ever over-subtracts).
-    * [[refreshCounts]] re-levels both, after which [[probe]] ==
-    * rebuild-over-survivors exactly (ContainIndexSpec differential on
-    * the serving face). Survivors staged (localCheckpoint); the
-    * doc-array table — written second at build — drops FIRST so a
-    * crash between the writes breaks the both-tables gate into a
-    * rebuild (the IvfIndex split/merge write order). Returns
-    * (posting rows removed, doc-array rows removed).
+    * After a re-level [[probe]] == rebuild-over-survivors exactly
+    * (ContainIndexSpec differential on the serving face). The doc-array
+    * table is the build gate. Returns (posting rows removed, doc-array
+    * rows removed).
     */
   def delete(spark: SparkSession, docIds: DataFrame,
              tag: String): (Long, Long) = {
-    val ngT = ngramT(tag)
-    val dcT = docT(tag)
-    require(spark.catalog.tableExists(ngT) && spark.catalog.tableExists(dcT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
-    val ng = spark.table(ngT)
-    val dc = spark.table(dcT)
-    val ngRemoved = ng.join(ids, Seq("doc_id"), "left_semi").count()
-    val dcRemoved = dc.join(ids, Seq("doc_id"), "left_semi").count()
-    if (ngRemoved == 0L && dcRemoved == 0L) return (0L, 0L)
-    // ledger first (crash order): the deleted docs' n-grams are exactly
-    // the keys whose surviving df is about to go stale
-    recordTouched(spark, tag,
-      ng.join(ids, Seq("doc_id"), "left_semi").select("g1"))
-    val buckets = BandIndex.bucketsOf(spark, ngT)
-    val stagedNg = ng.join(ids, Seq("doc_id"), "left_anti")
-      .select("g1", "doc_id", "na", "df", "pb")
-      .localCheckpoint()
-    val stagedDc = dc.join(ids, Seq("doc_id"), "left_anti")
-      .select("doc_id", "ng", "na", "oc", "pd")
-      .localCheckpoint()
-    spark.sql(s"DROP TABLE IF EXISTS $dcT")
-    // no re-clustering: staged survivors are bucket-aligned (§2.4)
-    writePostings(stagedNg, buckets, ngT, cluster = false)
-    writeDocs(stagedDc, buckets, dcT, cluster = false)
-    spark.catalog.refreshTable(ngT)
-    spark.catalog.refreshTable(dcT)
-    (ngRemoved, dcRemoved)
+    val (ngT, dcT) = (ngrams(tag), docs(tag))
+    BucketedTable.requireBuilt(spark, "delete", tag, ngT.name, dcT.name)
+    val Seq(ng, dc) = BucketedTable.deleteKeyed(spark, docIds, "doc_id",
+      Seq(ngT, dcT), gate = Some(dcT.name), ledger = Some(ledger(tag)))
+    (ng, dc)
   }
 
   /** What the df cap silently excludes from candidate generation on
@@ -412,7 +251,7 @@ object ContainIndex {
     */
   def capAudit(spark: SparkSession, tag: String,
                cap: Int = DedupQueries.ContainDfCap): (Long, Long) = {
-    val r = spark.table(ngramT(tag))
+    val r = spark.table(ngrams(tag).name)
       .filter(col("df") > cap)
       .agg(count_distinct(col("g1")).as("n_grams"),
         count(lit(1)).as("n_rows"))
@@ -421,20 +260,16 @@ object ContainIndex {
   }
 
   /** Derived bucket count this tag was built with — a report-row
-    * metric (the sizing choice must be visible).
+    * metric.
     */
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, ngramT(tag))
+    BucketedTable.bucketsOf(spark, ngrams(tag).name)
 
-  /** Whether the stored index for `tag` is fully cataloged (the
-    * IvfIndex convention) AT the current vintage: both tables must
-    * carry the r17 pb/pd partition mirrors the maintenance verbs
-    * require ([[BandIndex.partitionedBy]]) — a pre-mirror store reads
-    * as absent and self-heals via buildOrLoad.
+  /** Whether the stored index for `tag` is fully cataloged at the
+    * current vintage (both tables carry their pb/pd mirrors).
     */
   def exists(spark: SparkSession, tag: String): Boolean =
-    BandIndex.partitionedBy(spark, ngramT(tag), "pb") &&
-      BandIndex.partitionedBy(spark, docT(tag), "pd")
+    ngrams(tag).cataloged(spark) && docs(tag).cataloged(spark)
 
   /** The probe — ONE definition shared by the declared incremental
     * query and the streaming ingest face, so batch and stream cannot

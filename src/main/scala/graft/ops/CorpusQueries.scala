@@ -1062,7 +1062,7 @@ object CorpusQueries {
         s"Determinism: decimal-exact per-chunk BM25 sums, integer " +
         s"tiebreaks (chunk_idx, doc_id).",
       (s, dir) => passageRetrieval(s, Tables.par(s, dir, "documents"),
-        ChunkStore.tag(dir), BandIndex.tag(dir, "plex"), Bm25Terms),
+        ChunkStore.tag(dir), BucketedTable.tag(dir, "plex"), Bm25Terms),
       Some {
         // Generated from Bm25Terms (the q_bm25 convention) at CHUNK
         // grain: the chunk CTEs mirror PackingQueries.chunkRowsOf
@@ -1162,8 +1162,8 @@ object CorpusQueries {
         s"rows. The corpus is touched only at index BUILD (once per " +
         s"session/snapshot, like every stored family).",
       (s, dir) => passageFusion(s, Tables.par(s, dir, "documents"),
-        ChunkStore.tag(dir), BandIndex.tag(dir, "plex"),
-        BandIndex.tag(dir, "pvec"), Bm25Terms),
+        ChunkStore.tag(dir), BucketedTable.tag(dir, "plex"),
+        BucketedTable.tag(dir, "pvec"), Bm25Terms),
       Some {
         val w = PackingQueries.ChunkW
         val startsSql = PackingQueries.chunkStartsSql
@@ -1302,7 +1302,7 @@ object CorpusQueries {
         s"doc-grain aggregates over df-bounded matched rows; the " +
         s"union that ranks them is five top-10 relations.",
       (s, dir) => passageAggSweep(s, Tables.par(s, dir, "documents"),
-        ChunkStore.tag(dir), BandIndex.tag(dir, "plex"),
+        ChunkStore.tag(dir), BucketedTable.tag(dir, "plex"),
         LexIndex.tag(dir), Bm25Terms),
       Some {
         val w = PackingQueries.ChunkW

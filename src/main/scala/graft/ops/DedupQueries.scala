@@ -2209,7 +2209,7 @@ object DedupQueries {
         // populations would silently poison whichever built second).
         val (idxSh, idxBands) = BandIndex.buildOrLoad(s,
           Tables.par(s, dir, "documents").filter(!isNew),
-          BandIndex.tag(dir, "standing"))
+          BucketedTable.tag(dir, "standing"))
         // boilerplate cap on the INDEX side only (a bucket with one
         // existing doc must still match new arrivals, so no lower bound);
         // bsz is a stored column -> pushed filter, no window, no Exchange

@@ -1197,9 +1197,9 @@ object GovernanceQueries {
         val docs = Tables.par(s, dir, "documents")
         val sub = docs.filter(col("doc_id") % 5 === 0)
         val ids = sub.filter(col("doc_id") % 20 === 0).select("doc_id")
-        val tagL = BandIndex.tag(dir, "tdlex")
-        val tagB = BandIndex.tag(dir, "tdband")
-        val tagC = BandIndex.tag(dir, "tdchunk")
+        val tagL = BucketedTable.tag(dir, "tdlex")
+        val tagB = BucketedTable.tag(dir, "tdband")
+        val tagC = BucketedTable.tag(dir, "tdchunk")
         // fresh per execution: a prior run's post-delete tables would
         // make the second run a no-op delete over different state.
         // The drop list is each family's OWN tables(tag) (r16 ADVICE

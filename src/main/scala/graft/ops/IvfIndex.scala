@@ -3,12 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Stored IVF vector index — the third stored-artifact family (after
-  * [[BandIndex]] and [[SpanSet]]): the cell assignment and refined
-  * centroids the ANN queries score against, materialized as tables
-  * instead of rebuilt (or merely session-cached) per run.
-  *
-  * Two tables per (corpus snapshot, cell count):
+/** Stored IVF vector index: the cell assignment and refined centroids
+  * the ANN queries score against, materialized as tables instead of
+  * rebuilt (or merely session-cached) per run. Lifecycle and layout
+  * rules: [[BucketedTable]].
   *
   *   - `<tag>_ivfcells`     (vec_id, v, nrm, cell) bucketed by cell
   *   - `<tag>_ivfcentroids` (cell, cv, cn)         tiny, plain
@@ -22,12 +20,10 @@ import org.apache.spark.sql.functions._
   * definition, no drift), so stored and cached results are identical
   * and the DuckDB oracle stays bit-comparable.
   *
-  * Maintenance mirrors the other artifacts: [[append]] assigns a new
-  * batch against the EXISTING centroids and inserts its cell rows
-  * (centroids go stale as data drifts — the documented lower-bound
-  * analogue), [[refreshCentroids]] recomputes exact Lloyd means from
-  * the stored cells. Builds run once per (session, snapshot, cells)
-  * keyed by catalog presence.
+  * Staleness contract: [[append]] assigns a new batch against the
+  * EXISTING centroids and inserts its cell rows (centroids go stale as
+  * data drifts), [[refreshCentroids]] recomputes exact Lloyd means from
+  * the stored cells.
   */
 object IvfIndex {
 
@@ -35,20 +31,22 @@ object IvfIndex {
     * artifact, not silently read one quantized differently.
     */
   def tag(dir: String, nCells: Int): String =
-    BandIndex.tag(dir, s"ivf$nCells")
+    BucketedTable.tag(dir, s"ivf$nCells")
 
-  private def cellsT(tag: String) = s"${tag}_ivfcells"
+  private def cells(tag: String) = BucketedTable.Table(s"${tag}_ivfcells",
+    Seq("cell"), Seq("vec_id", "v", "nrm", "cell"))
+  private def cellsT(tag: String) = cells(tag).name
   private def centT(tag: String) = s"${tag}_ivfcentroids"
 
-  /** Every table this family stores for `tag` (r16 ADVICE #2: reset
-    * paths reuse this so they cannot drift from the layout).
+  /** Every table this family stores for `tag` (reset paths reuse this so
+    * they cannot drift from the layout).
     */
   def tables(tag: String): Seq[String] = Seq(cellsT(tag), centT(tag))
 
   /** Whether the stored index for `tag` is fully cataloged — the
     * buildOrLoad gate, exposed so callers (the pipeline's artifact
     * phase) can distinguish "pre-existing index" from "freshly built
-    * this call" BEFORE buildOrLoad erases the difference. r14 advice:
+    * this call" BEFORE buildOrLoad erases the difference:
     * maintenance like [[splitHotCells]] must not run on a fresh build
     * under a tag that declared oracle-checked queries read.
     */
@@ -58,7 +56,7 @@ object IvfIndex {
 
   /** Derived bucket count this tag was built with (report-row metric). */
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, cellsT(tag))
+    BucketedTable.bucketsOf(spark, cellsT(tag))
 
   /** Materialize (or reuse, if already cataloged this session) the IVF
     * index for the corpus at `dir`. Returns (cells, centroids) as reads
@@ -66,7 +64,7 @@ object IvfIndex {
     */
   def buildOrLoad(spark: SparkSession, dir: String, nCells: Int,
                   log: graft.etl.MigrationLog = graft.etl.MigrationLog.silent,
-                  targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
+                  targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket
                  ): (DataFrame, DataFrame) =
     // Cell-row cardinality == corpus cardinality (one row per vector),
     // so the bucket derivation reads the parquet count — metadata-only,
@@ -78,10 +76,10 @@ object IvfIndex {
 
   /** [[buildOrLoad]] for an ARBITRARY normalized vector relation
     * (vec_id, v, nrm) under an explicit family tag — the LexIndex
-    * `plex` precedent applied to the vector stack (r17 verdict next
-    * #3): the chunk-grain index q_passage_fusion probes is THIS family
-    * at a chunk tag, so append/delete/refreshCentroids/split/merge
-    * apply to it unchanged (they read stored tables by tag). `vectors`
+    * `plex` precedent applied to the vector stack: the chunk-grain
+    * index q_passage_fusion probes is THIS family at a chunk tag, so
+    * append/delete/refreshCentroids/split/merge apply to it unchanged
+    * (they read stored tables by tag). `vectors`
     * is by-name: the build scan only runs when the catalog gate says
     * build. `nRows` overrides the cardinality read for callers whose
     * count is metadata-cheap (the embeddings parquet); the default
@@ -93,28 +91,18 @@ object IvfIndex {
                          log: graft.etl.MigrationLog =
                            graft.etl.MigrationLog.silent,
                          targetRowsPerBucket: Long =
-                           BandIndex.TargetRowsPerBucket,
+                           BucketedTable.TargetRowsPerBucket,
                          nRows: () => Long = null
                         ): (DataFrame, DataFrame) = {
     val (cT, mT) = (cellsT(t), centT(t))
-    // Gate on BOTH tables: cT is written first, so a crash before mT
-    // lands would otherwise leave a half-built index that short-circuits
-    // every later call into a missing-table error (the ContainIndex
-    // self-heal fix, applied to the one other family that writes its
-    // gate table first).
-    if (!(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT))) {
-      BandIndex.dropStaleLocations(spark, Seq(cT, mT))
+    if (BucketedTable.buildIfAbsent(spark, exists(spark, t), tables(t)) {
       val vecs = vectors
-      val buckets = BandIndex.derivedBuckets(
+      val buckets = BucketedTable.derivedBuckets(
         if (nRows != null) nRows() else vecs.count(), targetRowsPerBucket)
       val (a2, centn) = SimilarityQueries.buildIvf(vecs, nCells)
-      // repartition-by-bucket-key: one file per bucket (r19 §6,
-      // the LexIndex.writePostings rationale)
-      a2.repartition(buckets, col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell").sortBy("cell")
-        .saveAsTable(cT)
+      BucketedTable.write(a2, cells(t), buckets)
       centn.write.mode(SaveMode.Overwrite).saveAsTable(mT)
+    }) {
       // Build-time audit: list balance decides probe cost — a corpus
       // collapsing into few cells quantizes badly and deserves a loud
       // line (the hot-bucket convention applied to inverted lists).
@@ -150,21 +138,18 @@ object IvfIndex {
   def append(spark: SparkSession, newVectors: DataFrame, tag: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     val (cT, mT) = (cellsT(tag), centT(tag))
-    require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
-      s"append target $tag does not exist — buildOrLoad first")
+    BucketedTable.requireBuilt(spark, "append", tag, cT, mT)
     val centn = spark.table(mT)
     val w = Window.partitionBy("vec_id").orderBy(col("cosc").desc, col("cell").asc)
-    newVectors.crossJoin(broadcast(centn))
+    BucketedTable.insert(spark, newVectors.crossJoin(broadcast(centn))
       .withColumn("cosc",
         graft.functions.VectorFunctions.dot(col("v"), col("cv"))
           / (col("nrm") * col("cn")))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("vec_id", "v", "nrm", "cell")
-      .write.insertInto(cT)
+      .filter(col("rn") === 1), cells(tag))
   }
 
-  /** Cell-SPLIT maintenance (r13 verdict #3): under sustained
+  /** Cell-SPLIT maintenance: under sustained
     * [[append]] a hot cell grows without bound — centroids never move
     * and no cell ever divides, so the probe-fraction assumption
     * (searched work ≈ p/cells of the index) and SemDeDup's Σ|cell|²
@@ -193,7 +178,7 @@ object IvfIndex {
     * INTENTIONALLY diverges from the fresh-build assignment — the same
     * class of documented drift as [[append]]'s stale centroids. The
     * pipeline therefore runs this ONLY on indexes that PRE-EXISTED the
-    * migration call (r14 advice: a fresh Lloyd build on clustered data
+    * migration call (a fresh Lloyd build on clustered data
     * can legitimately trip the bound, and splitting at build time would
     * diverge the exact tag the declared oracle-checked queries load;
     * gate via [[exists]] before buildOrLoad). A maintained index trades
@@ -203,7 +188,7 @@ object IvfIndex {
     * + work proportional to the HOT cells only — the split never
     * touches the balanced part of a 10^10-vector index. Both table
     * rewrites stage through localCheckpoint — the write plan must not
-    * scan its own target (the r13-advice rule).
+    * scan its own target.
     *
     * Returns (cells split, max cell before, max cell after).
     */
@@ -211,10 +196,9 @@ object IvfIndex {
                     factor: Double = 2.0): (Int, Long, Long) = {
     import org.apache.spark.sql.expressions.Window
     val (cT, mT) = (cellsT(tag), centT(tag))
-    require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
-      s"split target $tag does not exist — buildOrLoad first")
-    val cells = spark.table(cT)
-    val sizes = cells.groupBy("cell").agg(count(lit(1)).as("n"))
+    BucketedTable.requireBuilt(spark, "split", tag, cT, mT)
+    val stored = spark.table(cT)
+    val sizes = stored.groupBy("cell").agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val st = sizes.agg(coalesce(sum(col("n")), lit(0L)),
@@ -227,7 +211,7 @@ object IvfIndex {
       // back out as a BROADCAST relation, never as isin(...) literals:
       // with many hot cells the literal list bloats every plan that
       // embeds it three times, where a broadcast hash join's build side
-      // is one exchange (r14 advice). Child ids are computed on the
+      // is one exchange. Child ids are computed on the
       // collected list — maxId + 2·rank(parent) + seedRank over hot
       // ids sorted ascending, EXACTLY the row numbering the previous
       // global Window.orderBy(cell, sr) produced, without the
@@ -236,14 +220,14 @@ object IvfIndex {
         .select(col("cell").cast("long")).collect().map(_.getLong(0))
         .sorted.toSeq
       if (hot.isEmpty) return (0, maxBefore, maxBefore)
-      val maxId = cells.agg(coalesce(max(col("cell")), lit(0L)))
+      val maxId = stored.agg(coalesce(max(col("cell")), lit(0L)))
         .collect()(0).getLong(0)
       import spark.implicits._
       val childMap = broadcast(hot.zipWithIndex.flatMap { case (c, i) =>
         Seq((c, 1, maxId + 2L * i + 1L), (c, 2, maxId + 2L * i + 2L))
       }.toDF("cell", "sr", "child"))
       val hotSet = broadcast(hot.toDF("cell"))
-      val hotRows = cells.join(hotSet, Seq("cell"), "left_semi")
+      val hotRows = stored.join(hotSet, Seq("cell"), "left_semi")
       // two deterministic child seeds per hot cell (the build seed rule,
       // applied locally — a cell-partitioned window, parallel per cell)
       val wSeed = Window.partitionBy("cell")
@@ -263,8 +247,8 @@ object IvfIndex {
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("v"), col("nrm"),
           col("child").as("cell"))
-      val buckets = BandIndex.bucketsOf(spark, cT)
-      val stagedCells = cells.join(hotSet, Seq("cell"), "left_anti")
+      val buckets = BucketedTable.bucketsOf(spark, cT)
+      val stagedCells = stored.join(hotSet, Seq("cell"), "left_anti")
         .unionByName(reassigned)
         .localCheckpoint()
       // child centroids: the refreshCentroids expression over the
@@ -284,7 +268,7 @@ object IvfIndex {
         .join(hotSet, Seq("cell"), "left_anti")
         .unionByName(childCents)
         .localCheckpoint()
-      // Crash-safe write order (r14 review): both staged relations are
+      // Crash-safe write order: both staged relations are
       // materialized, so BREAK the buildOrLoad gate first — drop the
       // centroid table — then rewrite cells, then restore centroids.
       // A crash anywhere between leaves mT missing, which the
@@ -293,10 +277,7 @@ object IvfIndex {
       // present but inconsistent (child rows without centroids), a
       // corruption no existence gate can see.
       spark.sql(s"DROP TABLE IF EXISTS $mT")
-      stagedCells.repartition(buckets, col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell").sortBy("cell")
-        .saveAsTable(cT)
+      BucketedTable.write(stagedCells, cells(tag), buckets)
       stagedCents.write.mode(SaveMode.Overwrite).saveAsTable(mT)
       spark.catalog.refreshTable(cT)
       spark.catalog.refreshTable(mT)
@@ -307,8 +288,8 @@ object IvfIndex {
     } finally sizes.unpersist()
   }
 
-  /** Cold-cell MERGE maintenance — [[splitHotCells]]' dual (r14
-    * verdict #7): sustained append + split leaves STARVED cells where
+  /** Cold-cell MERGE maintenance — [[splitHotCells]]' dual:
+    * sustained append + split leaves STARVED cells where
     * the data is NOT — every probe of a 2-vector cell pays a broadcast
     * centroid row, a probe-join task, and returns almost nothing, so
     * the probe budget (a fixed cells/8 count) buys a shrinking
@@ -316,8 +297,8 @@ object IvfIndex {
     * than mean/`factor` retires — including EMPTY cells (a centroid
     * with zero member rows: every member deleted, or a split child
     * that won nothing), which the occupancy bound alone cannot see
-    * because the sizes relation only carries occupied cells (r15
-    * advice): their centroids anti-join away with no members to move.
+    * because the sizes relation only carries occupied cells:
+    * their centroids anti-join away with no members to move.
     * An occupied cold cell's members reassign to their nearest
     * SURVIVING (non-retired) centroid by the [[append]] assignment rule
     * VERBATIM (cosine desc, cell asc tiebreak — IvfIndexSpec pins
@@ -333,9 +314,9 @@ object IvfIndex {
     * surviving-centroid relation (~√n rows — the append join shape);
     * the balanced part of a 10^10-vector index is never touched. Cold
     * ids come to the driver once (bounded by the cell count) and ship
-    * back as a broadcast relation, never isin literals (the r14-advice
-    * rule). Same crash-safe write order as the split: both staged
-    * relations materialize, the centroid table drops FIRST (a crash
+    * back as a broadcast relation, never isin literals. Same
+    * crash-safe write order as the split: both staged relations
+    * materialize, the centroid table drops FIRST (a crash
     * anywhere between leaves the both-tables gate broken → rebuild,
     * never a cells/centroids mismatch), then cells rewrite, then
     * centroids restore. A merged index INTENTIONALLY diverges from the
@@ -354,10 +335,9 @@ object IvfIndex {
       "at factor <= 1 every cell below the mean would retire, " +
       "including the balanced ones")
     val (cT, mT) = (cellsT(tag), centT(tag))
-    require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
-      s"merge target $tag does not exist — buildOrLoad first")
-    val cells = spark.table(cT)
-    val sizes = cells.groupBy("cell").agg(count(lit(1)).as("n"))
+    BucketedTable.requireBuilt(spark, "merge", tag, cT, mT)
+    val stored = spark.table(cT)
+    val sizes = stored.groupBy("cell").agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val st = sizes.agg(coalesce(sum(col("n")), lit(0L)),
@@ -372,7 +352,7 @@ object IvfIndex {
       // member deleted, or a split child that won nothing) — are the
       // extreme of the dead-probe-budget motivation, yet invisible to
       // the occupancy bound (the sizes relation only has occupied
-      // cells; r15 advice). Retire them too: anti-join the centroid
+      // cells). Retire them too: anti-join the centroid
       // table against the occupied cell ids. No members to reassign.
       val empties = spark.table(mT)
         .join(sizes.select(col("cell")), Seq("cell"), "left_anti")
@@ -389,7 +369,7 @@ object IvfIndex {
       // append rule verbatim, restricted to survivors
       val wA = Window.partitionBy("vec_id")
         .orderBy(col("cosc").desc, col("cell").asc)
-      val reassigned = cells.join(coldSet, Seq("cell"), "left_semi")
+      val reassigned = stored.join(coldSet, Seq("cell"), "left_semi")
         .select(col("vec_id"), col("v"), col("nrm"))
         .crossJoin(broadcast(survCents))
         .withColumn("cosc",
@@ -398,16 +378,13 @@ object IvfIndex {
         .withColumn("rn", row_number().over(wA))
         .filter(col("rn") === 1)
         .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-      val buckets = BandIndex.bucketsOf(spark, cT)
-      val stagedCells = cells.join(coldSet, Seq("cell"), "left_anti")
+      val buckets = BucketedTable.bucketsOf(spark, cT)
+      val stagedCells = stored.join(coldSet, Seq("cell"), "left_anti")
         .unionByName(reassigned)
         .localCheckpoint()
       val stagedCents = survCents.localCheckpoint()
       spark.sql(s"DROP TABLE IF EXISTS $mT")
-      stagedCells.repartition(buckets, col("cell"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell").sortBy("cell")
-        .saveAsTable(cT)
+      BucketedTable.write(stagedCells, cells(tag), buckets)
       stagedCents.write.mode(SaveMode.Overwrite).saveAsTable(mT)
       spark.catalog.refreshTable(cT)
       spark.catalog.refreshTable(mT)
@@ -418,7 +395,7 @@ object IvfIndex {
     } finally sizes.unpersist()
   }
 
-  /** Takedown maintenance (r15 verdict #1): remove `vecIds`' cell rows.
+  /** Takedown maintenance: remove `vecIds`' cell rows.
     * Assignments are per-vector facts, so the CELLS table is exact
     * immediately: a deleted vector can never be probed, scored, or
     * returned again — its row is gone from the only table the serving
@@ -431,30 +408,13 @@ object IvfIndex {
     * centroids shift which cells are PROBED, never which vectors exist:
     * recall against the surviving corpus may drift until refresh, but
     * no deleted content is served — the direction a takedown needs.
-    * Anti-join rewrite preserving the bucket spec; survivors staged
-    * (localCheckpoint) before the overwrite. A crash mid-overwrite
-    * leaves the cells table partial/missing, which the both-tables gate
-    * turns into a rebuild. Returns cell rows removed.
+    * A crash mid-overwrite leaves the cells table partial/missing,
+    * which the both-tables gate turns into a rebuild
+    * ([[BucketedTable.deleteKeyed]]). Returns cell rows removed.
     */
   def delete(spark: SparkSession, vecIds: DataFrame, tag: String): Long = {
-    val (cT, mT) = (cellsT(tag), centT(tag))
-    require(spark.catalog.tableExists(cT) && spark.catalog.tableExists(mT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(vecIds.select(col("vec_id")).distinct())
-    val cells = spark.table(cT)
-    val removed = cells.join(ids, Seq("vec_id"), "left_semi").count()
-    if (removed == 0L) return 0L
-    val buckets = BandIndex.bucketsOf(spark, cT)
-    val staged = cells.join(ids, Seq("vec_id"), "left_anti")
-      .select("vec_id", "v", "nrm", "cell")
-      .localCheckpoint()
-    // no re-clustering (r19 §2.4): staged survivors come from a
-    // narrow anti-join of the bucketed scan — already bucket-aligned
-    staged.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cell").sortBy("cell")
-      .saveAsTable(cT)
-    spark.catalog.refreshTable(cT)
-    removed
+    BucketedTable.requireBuilt(spark, "delete", tag, cellsT(tag), centT(tag))
+    BucketedTable.deleteKeyed(spark, vecIds, "vec_id", Seq(cells(tag))).head
   }
 
   /** Periodic compaction: recompute exact Lloyd means (and norms) from
@@ -478,7 +438,7 @@ object IvfIndex {
       .write.mode(SaveMode.Overwrite).saveAsTable(centT(tag))
     // drop any session-cached plan over the pre-refresh centroids (the
     // splitHotCells/refreshCounts convention — saveAsTable's implicit
-    // invalidation does not reach persisted reads; r15 verdict #1)
+    // invalidation does not reach persisted reads)
     spark.catalog.refreshTable(centT(tag))
   }
 }

@@ -2,50 +2,41 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
-/** Stored lexical retrieval index — the NINTH stored artifact family
-  * (r13 verdict #2: BM25 was the one retrieval face with no stored
-  * artifact — q_bm25 re-tokenized the corpus per execution, fine as a
-  * query, wrong as a serving path; ANN has served from stored IVF/PQ
-  * tables since r9). The classic inverted index, Spark-shaped:
+/** Stored lexical retrieval index — the classic inverted index,
+  * Spark-shaped, so BM25 serves from stored postings instead of
+  * re-tokenizing the corpus per execution. Lifecycle and layout rules:
+  * [[BucketedTable]].
   *
-  *   - `<tag>_lpost`  (term, doc_id, tf, dl, df, pb) bucketed by term
-  *     AND partitioned by pb = pmod(hash(term), buckets) — the
-  *     postings. `df` (the term's document frequency) is PRECOMPUTED
-  *     at build via ONE skew-safe aggregation over the posting key and
-  *     stored ON each posting row (the BandIndex `bsz` / ContainIndex
-  *     `df` convention), so idf needs no second aggregation on any
-  *     read path; `dl` (the posting doc's token length) rides along so
-  *     scoring never joins back to the corpus; `pb` mirrors the bucket
-  *     hash so single BUCKETS can be rewritten via dynamic-partition
-  *     overwrite (see [[withPb]] / [[refreshCountsPartial]]).
+  *   - `<tag>_lpost`  (term, doc_id, tf, dl, df) bucketed by term,
+  *     partition mirror pb — the postings. `df` (the term's document
+  *     frequency) is precomputed at build and stored on each posting
+  *     row, so idf needs no second aggregation on any read path; `dl`
+  *     (the posting doc's token length) rides along so scoring never
+  *     joins back to the corpus.
   *   - `<tag>_lstats` (n_docs, sum_dl) — the 1-row corpus statistics
   *     (N and Σdl for avgdl), computed over the FULL corpus at build
   *     (docs containing no query term still shape avgdl).
-  *   - `<tag>_ltouched` (term) — the touched-terms ledger: terms whose
-  *     stored df went stale through [[append]] (lower bounds) or
-  *     [[delete]] (upper bounds), consumed by [[refreshCountsPartial]].
+  *   - `<tag>_ltouched` (term) — the touched-terms ledger.
   *
   * Why term-bucketed: a query touches exactly its terms' postings —
-  * the `term IN (...)` predicate both bucket-prunes the scan (Spark
-  * prunes buckets on equality/IN over the bucket column) and pushes to
-  * parquet, so a 3-term query against a 10^12-row posting table reads
-  * ~3 posting lists, not the index. The per-doc score combine then
-  * shuffles ONLY the matched postings (Σ_q df(t) rows — df-bounded,
-  * corpus-size-independent for selective terms); the corpus itself
-  * never appears in the serving plan (LexIndexSpec pins the plan shape:
-  * no documents scan, pruned buckets).
+  * the `term IN (...)` predicate both bucket-prunes the scan and pushes
+  * to parquet, so a 3-term query against a 10^12-row posting table
+  * reads ~3 posting lists, not the index. The per-doc score combine
+  * then shuffles ONLY the matched postings (Σ_q df(t) rows); the corpus
+  * itself never appears in the serving plan (LexIndexSpec pins the plan
+  * shape: no documents scan, pruned buckets).
   *
-  * Maintenance (the family contract): [[append]] inserts new docs'
-  * postings with BATCH-LOCAL df (a lower bound on the true frequency —
-  * for idf this errs toward scoring fresh postings slightly HIGH, the
-  * visible-until-refresh direction, never toward losing matches) and
-  * folds the batch's (count, Σdl) into the stats row; [[refreshCounts]]
-  * recomputes exact df over the full stored relation. Stats updates
-  * MATERIALIZE the standing row before overwriting (collect of 1 row —
-  * the write plan must not scan its own target, r13 advice).
+  * Staleness contract: [[append]] inserts new docs' postings with
+  * BATCH-LOCAL df (a lower bound — for idf this errs toward scoring
+  * fresh postings slightly HIGH, never toward losing matches) and folds
+  * the batch's (count, Σdl) into the stats row; [[delete]] leaves
+  * survivors' df as upper bounds; the re-level recomputes exact df.
+  * Stats updates materialize the standing row before overwriting
+  * (collect of 1 row — the write plan must not scan its own target).
   *
-  * Skew governance (r14 verdict #1 — the family's two Zipf hazards):
+  * Skew governance (the family's two Zipf hazards):
   *   - BUILD/REFRESH: df is derived via `groupBy("term").count()` +
   *     join-back, NEVER `Window.partitionBy("term")` — a window
   *     colocates every posting of a term in one partition, and under a
@@ -97,170 +88,48 @@ object LexIndex {
     */
   val PanelTermCap = 4096
 
-  def tag(dir: String): String = BandIndex.tag(dir, "lex")
+  def tag(dir: String): String = BucketedTable.tag(dir, "lex")
 
-  private def postT(tag: String) = s"${tag}_lpost"
+  import BucketedTable.{Ledger, Table}
+
+  private def post(tag: String) = Table(s"${tag}_lpost", Seq("term"),
+    Seq("term", "doc_id", "tf", "dl", "df"), Some("pb"))
   private def statsT(tag: String) = s"${tag}_lstats"
-  private def touchT(tag: String) = s"${tag}_ltouched"
+  private def ledger(tag: String) =
+    Ledger(s"${tag}_ltouched", new StructType().add("term", StringType))
 
   /** Every table this family stores for `tag` — the one list reset
     * paths (q_takedown_audit) reuse so they cannot drift from the
-    * storage layout (r16 ADVICE #2).
+    * storage layout.
     */
   def tables(tag: String): Seq[String] =
-    Seq(postT(tag), statsT(tag), touchT(tag))
+    Seq(post(tag).name, statsT(tag), ledger(tag).name)
 
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, postT(tag))
+    BucketedTable.bucketsOf(spark, post(tag).name)
 
-  /** Whether the stored index for `tag` is fully cataloged (the
-    * IvfIndex convention) AT the current vintage: the posting table
-    * must carry the r16 pb partition mirror the maintenance verbs
-    * require ([[BandIndex.partitionedBy]]) — a pre-mirror store reads
-    * as absent and self-heals via buildOrLoad.
+  /** Whether the stored index for `tag` is fully cataloged at the
+    * current vintage (the posting table carries its pb mirror).
     */
   def exists(spark: SparkSession, tag: String): Boolean =
-    BandIndex.partitionedBy(spark, postT(tag), "pb") &&
-      spark.catalog.tableExists(statsT(tag))
-
-  /** The posting table's partition column: pb = pmod(hash(term), nb),
-    * the SAME Murmur3(seed 42) + pmod expression Spark's bucketing
-    * routes `term` with, so partition pb=k holds exactly bucket k's
-    * rows (one bucket file per partition — total file count unchanged
-    * vs an unpartitioned bucketed table). Why partition at all: a
-    * bucketed table can only be rewritten WHOLE, but partitions can be
-    * dynamically overwritten one at a time — and since a term's rows
-    * are hash-confined to one pb, recomputing df over a subset of
-    * partitions is EXACT for every term they contain. That is what
-    * makes [[refreshCountsPartial]] a bounded maintenance op (rewrite
-    * only the buckets holding terms touched since the last exact
-    * level, untouched buckets byte-identical) instead of a full-table
-    * rewrite — at this family's 10^12-posting target scale the
-    * difference between the two is the costliest maintenance op in
-    * the repo vs a daily-batch-sized one (r15 verdict #4). Correctness
-    * does not depend on the hash equality — pb is its own stored
-    * column, written and pruned by literal predicates; the equality
-    * only keeps the one-file-per-partition layout.
-    */
-  private def withPb(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pb", expr(s"pmod(hash(term), $nb)").cast("int"))
-
-  /** r19 (§6 output file sizing / §2.4): `cluster` repartitions by
-    * the bucket key into exactly nb partitions before the bucketed
-    * write. Spark's bucket id and HashPartitioning use the same
-    * murmur3 pmod, so each write task then holds exactly one bucket —
-    * ONE file per bucket instead of (write tasks × buckets) fragments.
-    * Locally this cuts the commit protocol's file count ~tasks-fold
-    * (q_takedown_audit's dominant cost — the r19 c8-vs-c32 record
-    * shows its writes were overhead-bound); at scale it is the
-    * write.distribution-mode=hash trade: one shuffle of the staged
-    * rows buys right-sized files. Delete paths pass cluster = false:
-    * their staged survivors come from a narrow anti-join of the
-    * bucketed scan — already one aligned partition per bucket — so
-    * clustering again would ADD a full shuffle for nothing (§2.4).
-    * Correctness never depends on the file layout (bucket ids are
-    * per-row hashes; sortBy is per-file).
-    */
-  private def writePostings(staged: DataFrame, nb: Int,
-                            table: String, cluster: Boolean = true): Unit = {
-    val rows = staged.select("term", "doc_id", "tf", "dl", "df", "pb")
-    (if (cluster) rows.repartition(nb, col("term")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pb")
-      .bucketBy(nb, "term").sortBy("term")
-      .saveAsTable(table)
-  }
-
-  /** The touched-terms ledger backing [[refreshCountsPartial]]: every
-    * [[append]] records its batch's distinct terms, every [[delete]]
-    * the deleted docs' — exactly the terms whose stored df is stale
-    * (append: lower bounds on the new rows; delete: upper bounds on
-    * the survivors). Recorded BEFORE the postings mutate, so a crash
-    * between the two leaves only harmless extra ledger rows (partial
-    * refresh re-levels an already-exact term idempotently), never a
-    * stale term the ledger missed. Tiny: batch-vocabulary grain.
-    */
-  private def ensureTouched(spark: SparkSession, tag: String): Unit = {
-    val tT = touchT(tag)
-    if (!spark.catalog.tableExists(tT)) {
-      BandIndex.dropStaleLocations(spark, Seq(tT))
-      import spark.implicits._
-      Seq.empty[String].toDF("term")
-        .write.mode(SaveMode.Overwrite).saveAsTable(tT)
-    }
-  }
-
-  private def recordTouched(spark: SparkSession, tag: String,
-                            terms: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    terms.select(col("term")).distinct().write.insertInto(touchT(tag))
-  }
-
-  private def clearTouched(spark: SparkSession, tag: String): Unit = {
-    import spark.implicits._
-    Seq.empty[String].toDF("term")
-      .write.mode(SaveMode.Overwrite).saveAsTable(touchT(tag))
-    spark.catalog.refreshTable(touchT(tag))
-  }
+    post(tag).cataloged(spark) && spark.catalog.tableExists(statsT(tag))
 
   /** Ledger seeding for the re-level pricing bench
-    * ([[graft.RelevelBench]]) and policy specs — the ONE sanctioned
+    * ([[graft.RelevelBench]]) and policy specs — the one sanctioned
     * external write into the touched ledger, so the bench does not
     * hand-author the layout. Production paths never call this: append
     * and delete record their own vocabulary.
     */
   private[graft] def seedTouchedForBench(spark: SparkSession, tag: String,
                                          terms: DataFrame): Unit =
-    recordTouched(spark, tag, terms)
+    ledger(tag).record(spark, terms)
 
-  /** Fraction of the posting table's partitions the current ledger
-    * touches — the re-level POLICY's input ([[relevel]]): |distinct
-    * pmod(hash(term), nb) over the ledger| / nb. Ledger-grain work
-    * (batch vocabulary), no posting scan.
+  /** The re-level policy verb ([[BucketedTable.relevel]]) the
+    * pipeline's artifact phase applies.
     */
-  def touchedFraction(spark: SparkSession, tag: String): Double =
-    BandIndex.touchedFractionOf(spark, touchT(tag), postT(tag),
-      Seq("term"))
-
-  /** Partial-vs-full re-level policy threshold, set from MEASUREMENT
-    * (r18, `RELEVEL_r18.json` — sf0.1, 32 partitions, medians of 3
-    * reps on fresh identical pre-states; SCALE.md §"Pricing the
-    * re-level knob" holds the table and the why): the partial path
-    * beat the full re-level at EVERY measured touched-fraction,
-    * including true complete cover — 0.51×, 0.50×, 0.58×, 0.63× of
-    * full at f ∈ {1/32, 4/32, 16/32, 32/32} — because the
-    * dynamic-overwrite writer's cost is proportional to touched
-    * partitions while the full path always pays the whole bucketed
-    * rewrite. So the measured crossover does not exist below f = 1,
-    * and the threshold sits AT complete cover: [[relevel]] takes
-    * partial for any proper subset and full only when the ledger
-    * covers every partition — where the two are row-work-equivalent
-    * and full avoids the two costs that DO grow with cover at the
-    * 2^18-partition production layout (a touched-partition `isin`
-    * literal list the planner must carry, and one commit per
-    * partition vs one atomic table rewrite). That extrapolation is
-    * flagged as such: at sf0.1 those terms are sub-noise (0.72 s vs
-    * 1.15 s even at full cover).
-    */
-  val RelevelPartialMaxFraction = 1.0
-
-  /** The re-level POLICY verb the pipeline's artifact phase applies
-    * (r17 verdict missing #2): read the ledger's touched-partition
-    * fraction, take the bounded partial path below
-    * [[RelevelPartialMaxFraction]] and the wholesale full re-level at
-    * or above it. Returns (path, touched fraction, partitions
-    * rewritten) for the caller's report row — the decision must be
-    * visible, not silent.
-    */
-  def relevel(spark: SparkSession, tag: String): (String, Double, Long) = {
-    val f = touchedFraction(spark, tag)
-    if (f < RelevelPartialMaxFraction)
-      ("partial", f, refreshCountsPartial(spark, tag))
-    else {
-      refreshCounts(spark, tag)
-      ("full", f, BandIndex.bucketsOf(spark, postT(tag)).toLong)
-    }
-  }
+  def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
+    BucketedTable.relevel(spark, ledger(tag), post(tag))(
+      refreshCountsPartial(spark, tag), refreshCounts(spark, tag))
 
   /** Posting rows of a doc relation (doc_id, text): one row per
     * (doc, distinct term) with tf and dl — the derivation [[buildOrLoad]]
@@ -287,11 +156,9 @@ object LexIndex {
       .groupBy("term", "doc_id", "dl")
       .agg(count(lit(1)).as("tf"))
 
-  /** df stamped onto each posting row — ONE definition shared by
-    * build, append, and refresh so the three cannot drift. groupBy +
-    * join-back, NOT a term-partitioned window (r14 verdict #1); the
-    * derivation itself is [[BandIndex.withKeyCount]], the rule hoisted
-    * r17 so every artifact family shares the one skew-safe definition.
+  /** df stamped onto each posting row — one definition shared by
+    * build, append, and refresh so the three cannot drift; the skew-safe
+    * [[BandIndex.withKeyCount]], never a term-partitioned window.
     */
   private def withDf(post: DataFrame): DataFrame =
     BandIndex.withKeyCount(post, Seq("term"), "df")
@@ -302,39 +169,27 @@ object LexIndex {
     * (postings, stats) as reads of the stored tables.
     */
   def buildOrLoad(spark: SparkSession, docs: DataFrame, tag: String,
-                  targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
+                  targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket
                  ): (DataFrame, DataFrame) = {
-    val (pT, sT) = (postT(tag), statsT(tag))
-    // both-tables self-heal gate (the family convention): a crash
-    // between the two writes rebuilds rather than half-serving; the
-    // exists() predicate is also vintage-aware (r17 ADVICE), so a
-    // pre-pb-mirror store rebuilds here instead of failing inside the
-    // partial re-level
-    if (!exists(spark, tag)) {
-      Seq(pT, sT, touchT(tag)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-      BandIndex.dropStaleLocations(spark, Seq(pT, sT, touchT(tag)))
-      val post = postingRows(docs)
+    val (pT, sT) = (post(tag), statsT(tag))
+    BucketedTable.buildIfAbsent(spark, exists(spark, tag), tables(tag)) {
+      val rows = postingRows(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val buckets =
-          BandIndex.derivedBuckets(post.count(), targetRowsPerBucket)
-        // df computed ONCE at build (skew-safe groupBy+join, never a
-        // term window) — never again on the read path (the bsz
-        // convention). Partitioned by pb + bucketed by term — see
-        // [[withPb]] for why the layout carries both.
-        writePostings(withPb(withDf(post), buckets), buckets, pT)
+          BucketedTable.derivedBuckets(rows.count(), targetRowsPerBucket)
+        // df computed once at build, never again on the read path
+        BucketedTable.write(withDf(rows), pT, buckets)
         // corpus stats from the SAME cached posting relation: every doc
         // has >= 1 posting (tokens() of any text is non-empty), so the
         // doc-grain fold loses nothing
-        post.groupBy("doc_id").agg(first(col("dl")).as("dl"))
+        rows.groupBy("doc_id").agg(first(col("dl")).as("dl"))
           .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
           .write.mode(SaveMode.Overwrite).saveAsTable(sT)
-        // fresh build is exact everywhere — an empty touched ledger
-        ensureTouched(spark, tag)
-      } finally post.unpersist()
+        ledger(tag).ensure(spark)
+      } finally rows.unpersist()
     }
-    (spark.table(pT), spark.table(sT))
+    (spark.table(pT.name), spark.table(sT))
   }
 
   /** Daily-ingest maintenance: append `newDocs`' postings (batch-local
@@ -342,102 +197,63 @@ object LexIndex {
     * stats row.
     */
   def append(spark: SparkSession, newDocs: DataFrame, tag: String): Unit = {
-    val (pT, sT) = (postT(tag), statsT(tag))
-    require(spark.catalog.tableExists(pT) && spark.catalog.tableExists(sT),
-      s"append target $tag does not exist — buildOrLoad first")
-    val post = postingRows(newDocs)
+    val (pT, sT) = (post(tag), statsT(tag))
+    BucketedTable.requireBuilt(spark, "append", tag, pT.name, sT)
+    val rows = postingRows(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ledger first (see [[ensureTouched]] — crash between leaves
-      // only harmless extra rows), then the postings
-      recordTouched(spark, tag, post.select("term"))
-      withPb(withDf(post), BandIndex.bucketsOf(spark, pT))
-        .select("term", "doc_id", "tf", "dl", "df", "pb")
-        .write.insertInto(pT)
+      ledger(tag).record(spark, rows)
+      BucketedTable.insert(spark, withDf(rows), pT)
       // stats: standing row MATERIALIZED (1-row collect) before the
       // overwrite — never read-your-write-target
       val st = spark.table(sT).collect()(0)
       val (n0, s0) = (st.getLong(0), st.getLong(1))
-      val b = post.groupBy("doc_id").agg(first(col("dl")).as("dl"))
+      val b = rows.groupBy("doc_id").agg(first(col("dl")).as("dl"))
         .agg(count(lit(1)).cast("long"), sum(col("dl")).cast("long"))
         .collect()(0)
       import spark.implicits._
       Seq((n0 + b.getLong(0), s0 + b.getLong(1)))
         .toDF("n_docs", "sum_dl")
         .write.mode(SaveMode.Overwrite).saveAsTable(sT)
-    } finally post.unpersist()
+    } finally rows.unpersist()
   }
 
-  /** Periodic compaction: recompute exact df for EVERY posting row
-    * (appends leave batch-local lower bounds, deletes leave upper
-    * bounds on survivors), preserving the layout spec. Stats are
-    * already exact (append/delete fold exact counts). This is the
-    * full-table re-level; [[refreshCountsPartial]] is the bounded form
-    * that only rewrites buckets the ledger says are stale.
+  /** Full re-level: recompute exact df for EVERY posting row (appends
+    * leave batch-local lower bounds, deletes leave upper bounds on
+    * survivors), preserving the layout spec. Stats are already exact
+    * (append/delete fold exact counts). [[refreshCountsPartial]] is the
+    * bounded form.
     */
   def refreshCounts(spark: SparkSession, tag: String): Unit = {
-    val pT = postT(tag)
-    val buckets = BandIndex.bucketsOf(spark, pT)
-    val staged = withPb(withDf(spark.table(pT)
-        .select(col("term"), col("doc_id"), col("tf"), col("dl"))), buckets)
+    val pT = post(tag)
+    val staged = withDf(spark.table(pT.name)
+        .select(col("term"), col("doc_id"), col("tf"), col("dl")))
       .localCheckpoint() // sever from the table being overwritten
-    writePostings(staged, buckets, pT)
-    // drop any session-cached plan over the pre-refresh postings (the
-    // splitHotCells convention — saveAsTable's implicit invalidation
-    // does not reach persisted reads; r14 advice)
-    spark.catalog.refreshTable(pT)
-    // everything is exact again — the ledger resets
-    clearTouched(spark, tag)
+    BucketedTable.write(staged, pT, BucketedTable.bucketsOf(spark, pT.name))
+    spark.catalog.refreshTable(pT.name)
+    ledger(tag).clear(spark)
   }
 
-  /** BOUNDED df re-level (r15 verdict #4): rewrite ONLY the posting
-    * buckets that hold terms touched since the last exact level — the
-    * ledger [[append]]/[[delete]] maintain — leaving every other
-    * bucket's files byte-identical on disk. At the family's advertised
-    * 10^12-posting scale the full [[refreshCounts]] rewrite is the
-    * costliest maintenance op in the repo, yet only the touched terms'
-    * df is stale; this does daily-batch-proportional work instead:
-    *
-    *   1. touched terms → their partitions pb = pmod(hash(term), nb) —
-    *      a batch-vocabulary-grain distinct, collected (bounded by nb);
-    *   2. ONE partition-pruned scan of those partitions (a term's rows
-    *      are hash-confined to its pb, so df recomputed within the
-    *      touched partitions is EXACT for every term they contain —
-    *      including untouched co-bucketed terms, which re-level to the
-    *      value they already carry);
-    *   3. dynamic-partition overwrite of exactly those partitions
-    *      (staged via localCheckpoint — the write plan must not scan
-    *      its own target), preserving the bucket spec;
-    *   4. ledger reset.
-    *
-    * Equals [[refreshCounts]] exactly (LexIndexSpec differential), and
-    * untouched partitions are not rewritten (byte-identical files —
-    * spec-pinned). Returns the number of partitions rewritten.
+  /** Bounded df re-level ([[BucketedTable.relevelPartitions]]): rewrite
+    * only the posting buckets holding terms touched since the last
+    * exact level. At the family's advertised 10^12-posting scale the
+    * full [[refreshCounts]] rewrite is the costliest maintenance op in
+    * the repo, yet only the touched terms' df is stale. Equals
+    * [[refreshCounts]] exactly (LexIndexSpec differential); untouched
+    * partitions stay byte-identical. Returns partitions rewritten.
     */
-  def refreshCountsPartial(spark: SparkSession, tag: String): Long = {
-    val pT = postT(tag)
-    ensureTouched(spark, tag)
-    val nb = BandIndex.bucketsOf(spark, pT)
-    BandIndex.relevelPartitions(spark, pT,
-      spark.table(touchT(tag))
-        .select(expr(s"pmod(hash(term), $nb)").cast("int").as("pb")),
-      "pb",
-      scan => withPb(withDf(scan
-          .select(col("term"), col("doc_id"), col("tf"), col("dl"))), nb)
-        .select("term", "doc_id", "tf", "dl", "df", "pb"),
-      () => clearTouched(spark, tag))
-  }
+  def refreshCountsPartial(spark: SparkSession, tag: String): Long =
+    BucketedTable.relevelPartitions(spark, post(tag), ledger(tag),
+      scan => withDf(scan.select(col("term"), col("doc_id"), col("tf"),
+        col("dl"))))
 
-  /** Takedown maintenance (r15 verdict #1, dual of [[append]]): remove
-    * every posting row of `docIds` and subtract their exact (count,
-    * Σdl) from the stats row. A deleted doc can never be retrieved
-    * again — its postings are gone from the only table the scoring
-    * faces scan. STATS stay exact (the doc-grain fold over the deleted
-    * rows is subtracted before the rewrite). Surviving postings' df
-    * becomes a stale UPPER bound — it counted the deleted docs — with
-    * two documented consequences until the next re-level
-    * ([[refreshCountsPartial]] covers it: the deleted docs' terms are
-    * recorded in the touched ledger):
+  /** Takedown maintenance, dual of [[append]]: remove every posting row
+    * of `docIds` and subtract their exact (count, Σdl) from the stats
+    * row. A deleted doc can never be retrieved again — its postings are
+    * gone from the only table the scoring faces scan. Stats stay exact.
+    * Surviving postings' df becomes a stale UPPER bound — it counted the
+    * deleted docs — with two documented consequences until the next
+    * re-level (the deleted docs' terms are in the touched ledger):
     *   - idf is UNDER-estimated, so surviving matches score slightly
     *     LOW — the dual of append's batch-local lower bounds scoring
     *     fresh postings slightly high; neither direction loses a match;
@@ -445,25 +261,15 @@ object LexIndex {
     *     a freshly SHRUNK floor(0.9 · n_docs), so a near-stopword term
     *     deletion brought under the line may stay capped — cost-safe,
     *     recall-lossy only at the stopword margin where idf ≈ 0 anyway.
-    * Write order: ledger first (idempotent extra rows on crash), then
-    * the stats table — the buildOrLoad gate's second half — DROPS
-    * before the postings rewrite and is rewritten after it, so a crash
-    * anywhere between breaks the gate into a rebuild, never a
-    * postings/stats mismatch (the IvfIndex split/merge order). Returns
-    * posting rows removed.
+    * The stats table is the build gate: it drops before the postings
+    * rewrite and is rewritten after it. Returns posting rows removed.
     */
   def delete(spark: SparkSession, docIds: DataFrame, tag: String): Long = {
-    val (pT, sT) = (postT(tag), statsT(tag))
-    require(spark.catalog.tableExists(pT) && spark.catalog.tableExists(sT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
-    val post = spark.table(pT)
-    val gone = post.join(ids, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val removed = gone.count()
-      if (removed == 0L) return 0L
-      recordTouched(spark, tag, gone.select("term"))
+    val (pT, sT) = (post(tag), statsT(tag))
+    BucketedTable.requireBuilt(spark, "delete", tag, pT.name, sT)
+    BucketedTable.deleteKeyed(spark, docIds, "doc_id", Seq(pT),
+        gate = Some(sT), ledger = Some(ledger(tag)), reconcile = Some {
+          case Seq(gone) =>
       // the deleted docs' exact stats contribution, from their own
       // stored rows (dl rides on every posting); standing row
       // materialized (1-row collect) before any write
@@ -474,18 +280,12 @@ object LexIndex {
       val st = spark.table(sT).collect()(0)
       val (n1, s1) = (st.getLong(0) - g.getLong(0),
         st.getLong(1) - g.getLong(1))
-      val nb = BandIndex.bucketsOf(spark, pT)
-      val staged = post.join(ids, Seq("doc_id"), "left_anti")
-        .select("term", "doc_id", "tf", "dl", "df", "pb")
-        .localCheckpoint()
-      spark.sql(s"DROP TABLE IF EXISTS $sT")
-      writePostings(staged, nb, pT, cluster = false)
-      import spark.implicits._
-      Seq((n1, s1)).toDF("n_docs", "sum_dl")
-        .write.mode(SaveMode.Overwrite).saveAsTable(sT)
-      spark.catalog.refreshTable(pT)
-      removed
-    } finally gone.unpersist()
+      () => {
+        import spark.implicits._
+        Seq((n1, s1)).toDF("n_docs", "sum_dl")
+          .write.mode(SaveMode.Overwrite).saveAsTable(sT)
+      }
+    }).head
   }
 
   /** Decimal-exact per-doc BM25 combine over matched posting rows
@@ -579,7 +379,7 @@ object LexIndex {
     */
   def termDf(spark: SparkSession, tag: String,
              terms: Seq[String]): DataFrame =
-    spark.table(postT(tag))
+    spark.table(post(tag).name)
       .filter(col("term").isin(terms: _*))
       .groupBy("term").agg(max(col("df")).as("df"))
 
@@ -591,7 +391,7 @@ object LexIndex {
     */
   def termCorpusStats(spark: SparkSession, tag: String,
                       terms: Seq[String]): DataFrame =
-    spark.table(postT(tag))
+    spark.table(post(tag).name)
       .filter(col("term").isin(terms: _*))
       .groupBy("term").agg(max(col("df")).as("df"),
         sum(col("tf")).as("cf"))

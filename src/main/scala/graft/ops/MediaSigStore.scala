@@ -1,30 +1,28 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Stored media-signature artifact — the production home of the
   * perceptual dedup signatures ([[ImageDedup]] dHash, [[AudioDedup]]
-  * frame levels), promoted from a session cache to the BandIndex
-  * lifecycle (build once per corpus snapshot, bucketed scan-only reads,
-  * delta appends, ingest-time probes). One skeleton, role-tagged per
-  * media kind, two bucketed tables per (corpus, role):
+  * frame levels): build once per corpus snapshot, bucketed scan-only
+  * reads, delta appends, ingest-time probes. One skeleton, role-tagged
+  * per media kind. Lifecycle and layout rules: [[BucketedTable]].
   *
   *   - `<tag>_msig`  (doc_id, b0..b3)  bucketed by doc_id — the
   *     signatures, fetched by id at the exact-Hamming verify
-  *   - `<tag>_mband` (bk, doc_id, bsz) bucketed by bk, partitioned by
-  *     pbk = pmod(hash(bk), nb) (the LexIndex pb mirror enabling
-  *     [[refreshBucketSizesPartial]], r17; `<tag>_mtouched` is the
-  *     bucket ledger) — band postings
-  *     with the SINGLE key bk = band_idx * 2^16 + band_value, so the
-  *     candidate self-join (and every ingest probe) satisfies its
-  *     required distribution straight off the scan: one join key ==
-  *     the one bucketing key, no Exchange above either side. `bsz` is
-  *     the bucket's population, PRECOMPUTED at build (the BandIndex
-  *     convention), so the hot-bucket cap — a solid-color image class
-  *     or a silence-filled audio class collapses into ONE bucket whose
+  *   - `<tag>_mband` (bk, doc_id, bsz) bucketed by bk, partition mirror
+  *     pbk — band postings with the SINGLE key bk = band_idx * 2^16 +
+  *     band_value, so the candidate self-join (and every ingest probe)
+  *     satisfies its required distribution straight off the scan: one
+  *     join key == the one bucketing key, no Exchange above either
+  *     side. `bsz` is the bucket's population, precomputed at build, so
+  *     the hot-bucket cap — a solid-color image class or a
+  *     silence-filled audio class collapses into ONE bucket whose
   *     self-join is O(class²) at corpus scale — is a pushed parquet
   *     predicate on every read path, never a window over the index
+  *   - `<tag>_mtouched` (bk) — the touched-bucket ledger
   *
   * Why bk is one column: bucketing provides hash distribution on the
   * bucket column only — a join on (band_idx, band_value) would need
@@ -34,88 +32,41 @@ import org.apache.spark.sql.functions._
   *
   * The decode+hash pass (the only expensive step — PNG/WAV codec per
   * item) runs ONCE at build; queries and probes read the 4-int rows.
-  * Appends insert new rows into both tables (signatures are per-item
-  * facts — no cross-row merge needed, unlike SpanSet's count lattice);
-  * a probe of a batch against the standing index is the band equi-join
+  * A probe of a batch against the standing index is the band equi-join
   * + verify, shared between the batch incremental path and the
   * streaming face ([[graft.streaming.MediaStream]]).
   */
 object MediaSigStore {
 
-  def imageTag(dir: String): String = BandIndex.tag(dir, "imgsig")
-  def audioTag(dir: String): String = BandIndex.tag(dir, "audsig")
-  def videoTag(dir: String): String = BandIndex.tag(dir, "vidsig")
+  import BucketedTable.{Ledger, Table}
 
-  private def sigT(tag: String) = s"${tag}_msig"
-  private def bandT(tag: String) = s"${tag}_mband"
+  def imageTag(dir: String): String = BucketedTable.tag(dir, "imgsig")
+  def audioTag(dir: String): String = BucketedTable.tag(dir, "audsig")
+  def videoTag(dir: String): String = BucketedTable.tag(dir, "vidsig")
 
-  private def touchT(tag: String) = s"${tag}_mtouched"
+  private def sigs(tag: String) = Table(s"${tag}_msig", Seq("doc_id"),
+    Seq("doc_id", "b0", "b1", "b2", "b3"))
+  private def bands(tag: String) = Table(s"${tag}_mband", Seq("bk"),
+    Seq("bk", "doc_id", "bsz"), Some("pbk"))
+  private def ledger(tag: String) =
+    Ledger(s"${tag}_mtouched", new StructType().add("bk", IntegerType))
+  private def sigT(tag: String) = sigs(tag).name
+  private def bandT(tag: String) = bands(tag).name
 
-  /** Every table this family stores for `tag` (r16 ADVICE #2: reset
-    * paths reuse this so they cannot drift from the layout).
+  /** Every table this family stores for `tag` (reset paths reuse this so
+    * they cannot drift from the layout).
     */
   def tables(tag: String): Seq[String] =
-    Seq(sigT(tag), bandT(tag), touchT(tag))
-
-  /** pbk partition column mirroring the bk bucket hash (the LexIndex
-    * withPb convention, r17) — what makes [[refreshBucketSizesPartial]]
-    * a bounded op: a bk bucket's rows are hash-confined to one
-    * partition, so bsz recomputed over a partition subset is exact.
-    */
-  private def withPbk(df: DataFrame, nb: Int): DataFrame =
-    df.withColumn("pbk", expr(s"pmod(hash(bk), $nb)").cast("int"))
-
-  private def writeBands(staged: DataFrame, nb: Int, table: String,
-                         cluster: Boolean = true): Unit = {
-    // r19 (§6, the LexIndex.writePostings rationale): one file per
-    // bucket via bucket-key clustering; deletes pass false (§2.4)
-    val rows = staged.select("bk", "doc_id", "bsz", "pbk")
-    (if (cluster) rows.repartition(nb, col("bk")) else rows)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pbk")
-      .bucketBy(nb, "bk").sortBy("bk")
-      .saveAsTable(table)
-  }
-
-  /** Touched-bucket ledger (the LexIndex crash order: recorded BEFORE
-    * mutation — extra rows are harmless, missed ones are not).
-    */
-  private def ensureTouched(spark: SparkSession, tag: String): Unit = {
-    val tT = touchT(tag)
-    if (!spark.catalog.tableExists(tT)) {
-      BandIndex.dropStaleLocations(spark, Seq(tT))
-      import spark.implicits._
-      Seq.empty[Int].toDF("bk")
-        .write.mode(SaveMode.Overwrite).saveAsTable(tT)
-    }
-  }
-
-  private def recordTouched(spark: SparkSession, tag: String,
-                            keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("bk").cast("int")).distinct()
-      .write.insertInto(touchT(tag))
-  }
-
-  private def clearTouched(spark: SparkSession, tag: String): Unit = {
-    import spark.implicits._
-    Seq.empty[Int].toDF("bk")
-      .write.mode(SaveMode.Overwrite).saveAsTable(touchT(tag))
-    spark.catalog.refreshTable(touchT(tag))
-  }
+    Seq(sigT(tag), bandT(tag), ledger(tag).name)
 
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, sigT(tag))
+    BucketedTable.bucketsOf(spark, sigT(tag))
 
-  /** Whether the stored artifact for `tag` is fully cataloged (the
-    * IvfIndex convention) AT the current vintage: the band table must
-    * carry the r17 pbk partition mirror the maintenance verbs require
-    * ([[BandIndex.partitionedBy]]) — a pre-mirror store reads as
-    * absent and self-heals via buildOrLoad.
+  /** Whether the stored artifact for `tag` is fully cataloged at the
+    * current vintage (the band table carries its pbk mirror).
     */
   def exists(spark: SparkSession, tag: String): Boolean =
-    spark.catalog.tableExists(sigT(tag)) &&
-      BandIndex.partitionedBy(spark, bandT(tag), "pbk")
+    sigs(tag).cataloged(spark) && bands(tag).cataloged(spark)
 
   /** (bk, doc_id) postings of a signature relation. */
   private[ops] def bandRows(sigs: DataFrame): DataFrame =
@@ -124,6 +75,14 @@ object MediaSigStore {
         .as(Seq("bi", "bv")))
       .select((col("bi") * 65536 + col("bv")).as("bk"), col("doc_id"))
 
+  /** Band postings of a signature relation with the exact bucket
+    * population stamped (skew-safe [[BandIndex.withKeyCount]], never a
+    * bk window: the hottest bk IS the degenerate media class the cap
+    * exists for).
+    */
+  private def sizedBands(sigRows: DataFrame): DataFrame =
+    BandIndex.withKeyCount(bandRows(sigRows), Seq("bk"), "bsz")
+
   /** Materialize (or reuse, if cataloged) the signature artifact for
     * `docs` under `tag`; `sigFn` is the media kind's decode+hash pass
     * ([[ImageDedup.dhashSigs]] / [[AudioDedup.levelSigs]]). Returns
@@ -131,45 +90,25 @@ object MediaSigStore {
     */
   def buildOrLoad(spark: SparkSession, docs: DataFrame, tag: String,
                   sigFn: DataFrame => DataFrame,
-                  targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
+                  targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket
                  ): (DataFrame, DataFrame) = {
     val (sT, bT) = (sigT(tag), bandT(tag))
-    // gate on BOTH tables so a crash between the two writes self-heals,
-    // AND on the band table carrying the stored bsz column — a pre-cap
-    // vintage of the artifact (bk, doc_id only) would satisfy an
-    // existence-only gate and then break every capped read path
-    // (hammingPairs/probe/hotBucketAudit filter on bsz) with no
-    // self-heal. Schema drift of a stored artifact rebuilds like any
-    // other partial state.
-    // the SAME vintage-aware exists() the maintenance callers gate on
-    // (r17 ADVICE), plus the pre-r12 bsz drift check exists() does not
-    // carry (bsz is a stored column, not a partition mirror)
+    // beyond exists(): a pre-cap vintage band table (bk, doc_id only)
+    // would break every capped read path (hammingPairs/probe/
+    // hotBucketAudit filter on bsz), so it rebuilds like any other
+    // partial state
     val complete = exists(spark, tag) &&
       spark.table(bT).columns.contains("bsz")
-    if (!complete) {
-      Seq(sT, bT, touchT(tag)).foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-      BandIndex.dropStaleLocations(spark, Seq(sT, bT, touchT(tag)))
-      val sigs = sigFn(docs)
+    BucketedTable.buildIfAbsent(spark, complete, tables(tag)) {
+      val computed = sigFn(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val buckets =
-          BandIndex.derivedBuckets(sigs.count(), targetRowsPerBucket)
-        sigs.repartition(buckets, col("doc_id"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "doc_id").sortBy("doc_id")
-          .saveAsTable(sT)
-        // bucket-population column computed ONCE at build — the cap on
-        // the read paths is then a pushed scan predicate (BandIndex
-        // bsz) — via the skew-safe BandIndex.withKeyCount, never a bk
-        // window: the hottest bk IS the degenerate media class
-        // (solid color, silence) the cap exists for
-        writeBands(withPbk(
-          BandIndex.withKeyCount(bandRows(spark.table(sT)),
-            Seq("bk"), "bsz"), buckets), buckets, bT)
-        // fresh build is exact everywhere — an empty touched ledger
-        ensureTouched(spark, tag)
-      } finally sigs.unpersist()
+          BucketedTable.derivedBuckets(computed.count(), targetRowsPerBucket)
+        BucketedTable.write(computed, sigs(tag), buckets)
+        BucketedTable.write(sizedBands(spark.table(sT)), bands(tag), buckets)
+        ledger(tag).ensure(spark)
+      } finally computed.unpersist()
     }
     (spark.table(sT), spark.table(bT))
   }
@@ -180,168 +119,93 @@ object MediaSigStore {
   def append(spark: SparkSession, newDocs: DataFrame, tag: String,
              sigFn: DataFrame => DataFrame): Unit = {
     val (sT, bT) = (sigT(tag), bandT(tag))
-    require(spark.catalog.tableExists(sT) && spark.catalog.tableExists(bT),
-      s"append target $tag does not exist — buildOrLoad first")
-    val sigs = sigFn(newDocs)
+    BucketedTable.requireBuilt(spark, "append", tag, sT, bT)
+    val computed = sigFn(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      sigs.write.insertInto(sT)
+      BucketedTable.insert(spark, computed, sigs(tag))
       // bsz for appended rows = standing bucket count + batch count —
       // the bucket's TRUE size at insert time, so a bucket crossing
       // HotBucketCap through appends is capped for every row it gains
-      // from this point on (r12 advice: a per-batch-only count let
-      // build-vintage rows be filtered while fresh appends were kept,
-      // expanding a partial bucket). Standing rows keep their
-      // build-vintage bsz until [[refreshBucketSizes]] — the remaining
-      // staleness errs toward keeping OLD postings, never toward
-      // growing an over-cap bucket.
+      // from this point on (a per-batch-only count let build-vintage
+      // rows be filtered while fresh appends were kept, expanding a
+      // partial bucket). Standing rows keep their build-vintage bsz
+      // until the re-level — the remaining staleness errs toward
+      // keeping OLD postings, never toward growing an over-cap bucket.
       //
       // The standing counts are MATERIALIZED (collected) before the
       // insertInto is issued: the write plan must not scan its own
-      // target (r13 advice — Spark happens to list the target's files
-      // before the append commits, but read-your-write-target breaks
-      // under planning/caching changes). The collect is bounded: only
-      // the BATCH's bks are counted (≤ 4 per signature, micro-batch
-      // sized), one (bk, n) pair each.
+      // target. The collect is bounded: only the BATCH's bks are
+      // counted (≤ 4 per signature, micro-batch sized), one (bk, n)
+      // pair each.
       import spark.implicits._
-      val nb = BandIndex.bucketsOf(spark, bT)
-      // ledger first (crash order), then the rows
-      recordTouched(spark, tag, bandRows(sigs).select("bk"))
-      val batchBks = bandRows(sigs).select("bk").distinct()
+      ledger(tag).record(spark, bandRows(computed))
+      val batchBks = bandRows(computed).select("bk").distinct()
       val standing = spark.table(bT)
         .join(broadcast(batchBks), Seq("bk"), "left_semi")
         .groupBy("bk").agg(count(lit(1)).as("standing_n"))
         .select(col("bk").cast("int"), col("standing_n").cast("long"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
         .toDF("bk", "standing_n")
-      withPbk(BandIndex.withKeyCount(bandRows(sigs), Seq("bk"), "batch_n")
+      BucketedTable.insert(spark,
+        BandIndex.withKeyCount(bandRows(computed), Seq("bk"), "batch_n")
           .join(broadcast(standing), Seq("bk"), "left")
           .withColumn("bsz",
-            col("batch_n") + coalesce(col("standing_n"), lit(0L))), nb)
-        // explicit order: insertInto is positional (bk,doc_id,bsz,pbk)
-        .select(col("bk"), col("doc_id"), col("bsz"), col("pbk"))
-        .write.insertInto(bT)
-    } finally sigs.unpersist()
+            col("batch_n") + coalesce(col("standing_n"), lit(0L))),
+        bands(tag))
+    } finally computed.unpersist()
   }
 
-  /** Takedown maintenance (r15 verdict #1, dual of [[append]]): remove
-    * every signature and band-posting row of `docIds`. A deleted item
-    * can never be emitted as a candidate or verified as a match again —
-    * its postings and its signature row are gone from both serving
-    * joins. Surviving band rows keep their stored `bsz`, now a stale
-    * UPPER bound (the bucket was counted over a population that
-    * included the deleted items), so the hot-bucket cap errs toward
-    * SKIPPING a bucket deletion brought back under the cap — the exact
-    * dual of append's insert-time-true counts that only ever grow.
-    * [[refreshBucketSizes]] re-levels, after which [[probe]] ==
-    * rebuild-over-survivors exactly (MediaSigStoreSpec differential on
-    * the serving face). Survivors staged (localCheckpoint); the band
-    * table — written second at build — drops FIRST so a crash between
-    * the writes breaks the both-tables gate into a rebuild. Returns
-    * (signature rows removed, band rows removed).
+  /** Takedown maintenance, dual of [[append]]: remove every signature
+    * and band-posting row of `docIds`. A deleted item can never be
+    * emitted as a candidate or verified as a match again — its postings
+    * and its signature row are gone from both serving joins. Surviving
+    * band rows keep their stored `bsz`, now a stale UPPER bound (the
+    * bucket was counted over a population that included the deleted
+    * items), so the hot-bucket cap errs toward SKIPPING a bucket
+    * deletion brought back under the cap — the exact dual of append's
+    * insert-time-true counts that only ever grow. After a re-level
+    * [[probe]] == rebuild-over-survivors exactly (MediaSigStoreSpec
+    * differential on the serving face). The band table is the build
+    * gate. Returns (signature rows removed, band rows removed).
     */
   def delete(spark: SparkSession, docIds: DataFrame,
              tag: String): (Long, Long) = {
-    val (sT, bT) = (sigT(tag), bandT(tag))
-    require(spark.catalog.tableExists(sT) && spark.catalog.tableExists(bT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
-    val sigs = spark.table(sT)
-    val bands = spark.table(bT)
-    val sRemoved = sigs.join(ids, Seq("doc_id"), "left_semi").count()
-    val bRemoved = bands.join(ids, Seq("doc_id"), "left_semi").count()
-    if (sRemoved == 0L && bRemoved == 0L) return (0L, 0L)
-    // ledger first (crash order): the deleted items' buckets are the
-    // keys whose surviving bsz is about to go stale
-    recordTouched(spark, tag,
-      bands.join(ids, Seq("doc_id"), "left_semi").select("bk"))
-    val buckets = BandIndex.bucketsOf(spark, sT)
-    val stagedSigs = sigs.join(ids, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val stagedBands = bands.join(ids, Seq("doc_id"), "left_anti")
-      .select("bk", "doc_id", "bsz", "pbk")
-      .localCheckpoint()
-    spark.sql(s"DROP TABLE IF EXISTS $bT")
-    // no re-clustering: staged survivors are bucket-aligned (§2.4)
-    stagedSigs.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(sT)
-    writeBands(stagedBands, buckets, bT, cluster = false)
-    spark.catalog.refreshTable(sT)
-    spark.catalog.refreshTable(bT)
-    (sRemoved, bRemoved)
+    BucketedTable.requireBuilt(spark, "delete", tag, sigT(tag), bandT(tag))
+    val Seq(s, b) = BucketedTable.deleteKeyed(spark, docIds, "doc_id",
+      Seq(sigs(tag), bands(tag)), gate = Some(bandT(tag)),
+      ledger = Some(ledger(tag)))
+    (s, b)
   }
 
-  /** Periodic compaction: recompute exact bsz for EVERY row from the
-    * signature table, preserving the bucket spec. Appends stamp their
-    * own rows insert-time-exact (standing + batch), but STANDING rows
-    * keep build-vintage counts until this runs — refresh re-levels the
-    * whole bucket (r13: comment aligned with the r12-advice append
-    * semantics).
+  /** Full re-level: recompute exact bsz for EVERY row from the signature
+    * table, preserving the bucket spec. Appends stamp their own rows
+    * insert-time-exact (standing + batch), but standing rows keep
+    * build-vintage counts until this runs.
     */
   def refreshBucketSizes(spark: SparkSession, tag: String): Unit = {
     val bT = bandT(tag)
-    val buckets = BandIndex.bucketsOf(spark, bT)
-    writeBands(withPbk(
-      BandIndex.withKeyCount(bandRows(spark.table(sigT(tag))),
-        Seq("bk"), "bsz"), buckets), buckets, bT)
+    BucketedTable.write(sizedBands(spark.table(sigT(tag))), bands(tag),
+      BucketedTable.bucketsOf(spark, bT))
     spark.catalog.refreshTable(bT)
-    // everything is exact again — the ledger resets
-    clearTouched(spark, tag)
+    ledger(tag).clear(spark)
   }
 
-  /** BOUNDED bsz re-level (r17 — the LexIndex refreshCountsPartial
-    * pattern): rewrite ONLY the band-table partitions holding bk
-    * buckets touched since the last exact level (the ledger
-    * appends/deletes maintain), recomputing bsz from the band rows
-    * themselves over ONE partition-pruned scan (a bk's rows are
-    * hash-confined to its pbk partition, so partition-local counts are
-    * exact; band rows equal bandRows(sigs) by construction at every
-    * lifecycle state — MediaSigStoreSpec pins partial == the
-    * from-signatures full refresh row-for-row, untouched partitions
-    * byte-identical). Returns partitions rewritten.
+  /** Bounded bsz re-level ([[BucketedTable.relevelPartitions]]): bsz is
+    * recomputed from the touched partitions' band rows themselves —
+    * band rows equal bandRows(sigs) at every lifecycle state, so this
+    * equals the from-signatures [[refreshBucketSizes]] row-for-row
+    * (MediaSigStoreSpec). Returns partitions rewritten.
     */
-  def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long = {
-    val bT = bandT(tag)
-    ensureTouched(spark, tag)
-    val nb = BandIndex.bucketsOf(spark, bT)
-    BandIndex.relevelPartitions(spark, bT,
-      spark.table(touchT(tag))
-        .select(expr(s"pmod(hash(bk), $nb)").cast("int").as("pbk")),
-      "pbk",
-      scan => withPbk(BandIndex.withKeyCount(
-          scan.select(col("bk"), col("doc_id")),
-          Seq("bk"), "bsz"), nb)
-        .select("bk", "doc_id", "bsz", "pbk"),
-      () => clearTouched(spark, tag))
-  }
+  def refreshBucketSizesPartial(spark: SparkSession, tag: String): Long =
+    BucketedTable.relevelPartitions(spark, bands(tag), ledger(tag),
+      scan => BandIndex.withKeyCount(scan.select(col("bk"), col("doc_id")),
+        Seq("bk"), "bsz"))
 
-  /** The family's re-level POLICY verb (the LexIndex.relevel shape —
-    * threshold measured on the pattern family, RELEVEL_r18.json):
-    * partial below [[LexIndex.RelevelPartialMaxFraction]], full at
-    * complete cover. Returns (path, touched fraction, partitions
-    * rewritten).
-    */
-  def relevel(spark: SparkSession, tag: String): (String, Double, Long) = {
-    val f = BandIndex.touchedFractionOf(spark, touchT(tag), bandT(tag),
-      Seq("bk"))
-    if (f < LexIndex.RelevelPartialMaxFraction)
-      ("partial", f, refreshBucketSizesPartial(spark, tag))
-    else {
-      refreshBucketSizes(spark, tag)
-      ("full", f, BandIndex.bucketsOf(spark, bandT(tag)).toLong)
-    }
-  }
-
-  /** Ledger seeding for policy specs/benches — see
-    * [[LexIndex.seedTouchedForBench]]; production paths never call it.
-    */
-  private[graft] def seedTouchedForBench(spark: SparkSession, tag: String,
-                                         keys: DataFrame): Unit = {
-    ensureTouched(spark, tag)
-    keys.select(col("bk").cast("int")).distinct()
-      .write.insertInto(touchT(tag))
-  }
+  /** The re-level policy verb ([[BucketedTable.relevel]]). */
+  def relevel(spark: SparkSession, tag: String): (String, Double, Long) =
+    BucketedTable.relevel(spark, ledger(tag), bands(tag))(
+      refreshBucketSizesPartial(spark, tag), refreshBucketSizes(spark, tag))
 
   /** What the hot-bucket cap silently skips on the stored index:
     * (over-cap buckets, posting rows inside them). Scan-only — bsz is a

@@ -3,17 +3,14 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Stored product-quantization artifact — the fifth stored family
-  * (band index, span sets, chunk store, IVF index, now PQ): the
-  * sub-codebooks and the encoded corpus that `q_embedding_pq` scores
-  * by asymmetric distance, materialized as tables instead of re-derived
-  * per run. At 100 TB the codes table IS the point: M·log2(k) bits +
-  * a 4 B norm per vector against 4·Dim bytes of float32 (21× at the
-  * r13 default M=8, k=256, Dim=64), it is what stays resident for the
-  * ADC scan while full-precision vectors are touched only by the
-  * final re-rank.
-  *
-  * Two tables per corpus snapshot:
+/** Stored product-quantization artifact: the sub-codebooks and the
+  * encoded corpus that `q_embedding_pq` scores by asymmetric distance,
+  * materialized as tables instead of re-derived per run. At 100 TB the
+  * codes table IS the point: M·log2(k) bits + a 4 B norm per vector
+  * against 4·Dim bytes of float32 (21× at the default M=8, k=256,
+  * Dim=64), it is what stays resident for the ADC scan while
+  * full-precision vectors are touched only by the final re-rank.
+  * Lifecycle and layout rules: [[BucketedTable]].
   *
   *   - `<tag>_pqcodebook` (sub, code, cv)       PqM×PqK rows, plain
   *   - `<tag>_pqcodes`    (vec_id, nrm, codes)  bucketed by vec_id
@@ -23,9 +20,9 @@ import org.apache.spark.sql.functions._
   * (the IvfIndex nCells convention). Build runs the SAME derivation as
   * the declared query's oracle replay ([[SimilarityQueries
   * .buildPqCodebook]]/[[SimilarityQueries.encodePq]] — one definition,
-  * no drift), once per (session, snapshot) keyed by catalog presence.
+  * no drift).
   *
-  * Maintenance mirrors IvfIndex: [[append]] encodes a new batch
+  * Staleness contract: [[append]] encodes a new batch
   * against the EXISTING codebook and inserts its code rows — the
   * codebook goes stale as appended data drifts, the family's documented
   * staleness bound. Unlike IVF centroids, a PQ codebook CANNOT be
@@ -44,19 +41,21 @@ object PqStore {
     * keeps the two geometries from ever reading each other's codes.
     */
   def tag(dir: String, k: Int = SimilarityQueries.PqK): String =
-    BandIndex.tag(dir, s"pq${SimilarityQueries.PqM}x$k")
+    BucketedTable.tag(dir, s"pq${SimilarityQueries.PqM}x$k")
 
   private def cbT(tag: String) = s"${tag}_pqcodebook"
-  private def codesT(tag: String) = s"${tag}_pqcodes"
+  private def codes(tag: String) = BucketedTable.Table(s"${tag}_pqcodes",
+    Seq("vec_id"), Seq("vec_id", "nrm", "codes"))
+  private def codesT(tag: String) = codes(tag).name
 
-  /** Every table this family stores for `tag` (r16 ADVICE #2: reset
-    * paths reuse this so they cannot drift from the layout).
+  /** Every table this family stores for `tag` (reset paths reuse this so
+    * they cannot drift from the layout).
     */
   def tables(tag: String): Seq[String] = Seq(cbT(tag), codesT(tag))
 
   /** Derived bucket count this tag was built with (report-row metric). */
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, codesT(tag))
+    BucketedTable.bucketsOf(spark, codesT(tag))
 
   /** Whether the stored artifact for `tag` is fully cataloged (the
     * IvfIndex convention).
@@ -71,33 +70,24 @@ object PqStore {
     */
   def buildOrLoad(spark: SparkSession, dir: String,
                   log: graft.etl.MigrationLog = graft.etl.MigrationLog.silent,
-                  targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket,
+                  targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket,
                   k: Int = SimilarityQueries.PqK
                  ): (DataFrame, DataFrame) = {
     val t = tag(dir, k)
     val (bT, cT) = (cbT(t), codesT(t))
-    // both-tables gate (MediaSigStore convention, backported r12): any
-    // partial state — crash between writes or an external drop of either
-    // table — self-heals by rebuilding.
-    if (!(spark.catalog.tableExists(bT) && spark.catalog.tableExists(cT))) {
-      BandIndex.dropStaleLocations(spark, Seq(bT, cT))
+    if (BucketedTable.buildIfAbsent(spark, exists(spark, t), tables(t)) {
       // One code row per vector: bucket derivation is the parquet
       // count — metadata-only, no extra corpus pass.
-      val buckets = BandIndex.derivedBuckets(
+      val buckets = BucketedTable.derivedBuckets(
         graft.Tables.t(spark, dir, "embeddings").count(), targetRowsPerBucket)
       val n = SimilarityQueries.normalizedCorpus(spark, dir)
       val cb = SimilarityQueries.buildPqCodebook(n, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         cb.write.mode(SaveMode.Overwrite).saveAsTable(bT)
-        // repartition-by-bucket-key: one file per bucket (r19 §6,
-        // the LexIndex.writePostings rationale)
-        SimilarityQueries.encodePq(n, cb)
-          .repartition(buckets, col("vec_id"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "vec_id").sortBy("vec_id")
-          .saveAsTable(cT)
+        BucketedTable.write(SimilarityQueries.encodePq(n, cb), codes(t), buckets)
       } finally cb.unpersist()
+    }) {
       // Build-time audit: code utilization decides quantization error —
       // a subspace collapsing onto few codes wastes its bits and
       // deserves a loud line (the hot-bucket convention inverted).
@@ -129,14 +119,12 @@ object PqStore {
     * retrained — see the class doc for why PQ refresh is [[rebuild]].
     */
   def append(spark: SparkSession, newVectors: DataFrame, tag: String): Unit = {
-    val (bT, cT) = (cbT(tag), codesT(tag))
-    require(spark.catalog.tableExists(bT) && spark.catalog.tableExists(cT),
-      s"append target $tag does not exist — buildOrLoad first")
-    SimilarityQueries.encodePq(newVectors, spark.table(bT))
-      .write.insertInto(cT)
+    BucketedTable.requireBuilt(spark, "append", tag, cbT(tag), codesT(tag))
+    BucketedTable.insert(spark,
+      SimilarityQueries.encodePq(newVectors, spark.table(cbT(tag))), codes(tag))
   }
 
-  /** Takedown maintenance (r15 verdict #1): remove `vecIds`' code rows.
+  /** Takedown maintenance: remove `vecIds`' code rows.
     * Codes are per-vector facts encoded against the shared codebook, so
     * the CODES table is exact immediately: post-delete it equals
     * `encodePq(survivors, codebook)` row for row (PqStoreSpec
@@ -145,28 +133,12 @@ object PqStore {
     * it was trained on a corpus that included the deleted vectors, the
     * same model-grain drift as [[append]]'s un-retrained codebook; the
     * exactness follow-up is [[rebuild]] (retrain + re-encode), as the
-    * class doc argues for every codebook change. Anti-join rewrite
-    * preserving the bucket spec, survivors staged (localCheckpoint)
-    * before the overwrite. Returns code rows removed.
+    * class doc argues for every codebook change. Returns code rows
+    * removed.
     */
   def delete(spark: SparkSession, vecIds: DataFrame, tag: String): Long = {
-    val cT = codesT(tag)
-    require(spark.catalog.tableExists(cbT(tag)) &&
-      spark.catalog.tableExists(cT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(vecIds.select(col("vec_id")).distinct())
-    val t = spark.table(cT)
-    val removed = t.join(ids, Seq("vec_id"), "left_semi").count()
-    if (removed == 0L) return 0L
-    val buckets = BandIndex.bucketsOf(spark, cT)
-    val staged = t.join(ids, Seq("vec_id"), "left_anti")
-      .select("vec_id", "nrm", "codes")
-      .localCheckpoint()
-    staged.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "vec_id").sortBy("vec_id")
-      .saveAsTable(cT)
-    spark.catalog.refreshTable(cT)
-    removed
+    BucketedTable.requireBuilt(spark, "delete", tag, cbT(tag), codesT(tag))
+    BucketedTable.deleteKeyed(spark, vecIds, "vec_id", Seq(codes(tag))).head
   }
 
   /** Offline retrain: drop both tables and rebuild from the corpus —

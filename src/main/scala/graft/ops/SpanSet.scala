@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stored duplicated-span artifact — the materialized table pair that
@@ -8,10 +8,7 @@ import org.apache.spark.sql.functions._
   * probe ([[graft.streaming.CorpusStream.boilerplateHits]]) read,
   * instead of re-deriving the span-fingerprint relation from raw text
   * per run ([[SpanDedup.duplicatedSpanSet]]'s own Scaladoc promised
-  * exactly this shape; same prose-vs-plan gap the band index closed in
-  * r5 — same fix pattern, reused here).
-  *
-  * Two bucketed tables per corpus snapshot:
+  * exactly this shape). Lifecycle and layout rules: [[BucketedTable]].
   *
   *   - `<tag>_spanrows` (doc_id, source, n_spans, sh)  bucketed by sh
   *   - `<tag>_spanset`  (sh, nd)                       bucketed by sh
@@ -46,13 +43,11 @@ import org.apache.spark.sql.functions._
   * write-side alternative (merge batch counts INTO standing counts at
   * append) was rejected: with plain bucketed parquet it rewrites the
   * whole count table — corpus-token-order rows at 100 TB — per daily
-  * batch, to save readers a bucket-local agg. Builds run once per
-  * (session, corpus snapshot) keyed by catalog presence, same as the
-  * band index.
+  * batch, to save readers a bucket-local agg.
   */
 object SpanSet {
 
-  def tag(dir: String): String = BandIndex.tag(dir, "spans")
+  def tag(dir: String): String = BucketedTable.tag(dir, "spans")
 
   /** Tag of the CHARACTER-winnow family ([[SpanDedup.winnowRows]]) for a
     * corpus dir. A distinct role, so a word-gram artifact can never be
@@ -62,19 +57,23 @@ object SpanSet {
     * the tag STRUCTURALLY: `buildOrLoadChar`/`appendChar` are the only
     * public writers for this role.
     */
-  def charTag(dir: String): String = BandIndex.tag(dir, "charspans")
+  def charTag(dir: String): String = BucketedTable.tag(dir, "charspans")
 
-  private def rowsT(tag: String) = s"${tag}_spanrows"
-  private def setT(tag: String) = s"${tag}_spanset"
+  private def rows(tag: String) = BucketedTable.Table(s"${tag}_spanrows",
+    Seq("sh"), Seq("doc_id", "source", "n_spans", "sh"))
+  private def counts(tag: String) = BucketedTable.Table(s"${tag}_spanset",
+    Seq("sh"), Seq("sh", "nd"))
+  private def rowsT(tag: String) = rows(tag).name
+  private def setT(tag: String) = counts(tag).name
 
-  /** Every table this family stores for `tag` (r16 ADVICE #2: reset
-    * paths reuse this so they cannot drift from the layout).
+  /** Every table this family stores for `tag` (reset paths reuse this so
+    * they cannot drift from the layout).
     */
   def tables(tag: String): Seq[String] = Seq(rowsT(tag), setT(tag))
 
   /** Derived bucket count this tag was built with (report-row metric). */
   def buckets(spark: SparkSession, tag: String): Int =
-    BandIndex.bucketsOf(spark, rowsT(tag))
+    BucketedTable.bucketsOf(spark, rowsT(tag))
 
   /** Whether the stored artifact for `tag` is fully cataloged (the
     * IvfIndex convention).
@@ -89,7 +88,7 @@ object SpanSet {
     */
   def buildOrLoad(spark: SparkSession, docs: DataFrame, tag: String,
                   log: graft.etl.MigrationLog = graft.etl.MigrationLog.silent,
-                  targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
+                  targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket
                  ): (DataFrame, DataFrame) =
     buildWith(spark, docs, tag, log, targetRowsPerBucket,
       SpanDedup.spanRows(_, Seq("source")))
@@ -101,7 +100,7 @@ object SpanSet {
     */
   def buildOrLoadChar(spark: SparkSession, docs: DataFrame, tag: String,
                       log: graft.etl.MigrationLog = graft.etl.MigrationLog.silent,
-                      targetRowsPerBucket: Long = BandIndex.TargetRowsPerBucket
+                      targetRowsPerBucket: Long = BucketedTable.TargetRowsPerBucket
                      ): (DataFrame, DataFrame) =
     buildWith(spark, docs, tag, log, targetRowsPerBucket,
       SpanDedup.winnowRows(_, Seq("source")))
@@ -112,35 +111,22 @@ object SpanSet {
                         extractor: DataFrame => DataFrame
                        ): (DataFrame, DataFrame) = {
     val (rT, sT) = (rowsT(tag), setT(tag))
-    // both-tables gate (MediaSigStore convention, backported r12): any
-    // partial state — crash between writes or an external drop of either
-    // table — self-heals by rebuilding.
-    if (!(spark.catalog.tableExists(rT) && spark.catalog.tableExists(sT))) {
-      BandIndex.dropStaleLocations(spark, Seq(rT, sT))
+    if (BucketedTable.buildIfAbsent(spark, exists(spark, tag), tables(tag)) {
       // Persist so the sizing count and the write share one explode
       // pass; BOTH tables take the count derived from the span rows —
       // equal bucket counts on sh keep the rows ⋈ counts join
       // co-partitioned (the family invariant).
-      val rows = extractor(docs)
+      val extracted = extractor(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val buckets = BandIndex.derivedBuckets(rows.count(), targetRowsPerBucket)
-        // repartition-by-bucket-key: one file per bucket (r19 §6);
-        // the counts write below stays untouched — it is bucket-local
-        // over this table and already aligned
-        rows.repartition(buckets, col("sh"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "sh").sortBy("sh")
-          .saveAsTable(rT)
-        // Counts derive from the stored rows (one explode pass total);
-        // the rows table is already sh-bucketed, so this aggregation is
-        // bucket-local — no shuffle even at build time.
-        spark.table(rT).groupBy("sh")
-          .agg(count(lit(1)).as("nd"))
-          .write.mode(SaveMode.Overwrite)
-          .bucketBy(buckets, "sh").sortBy("sh")
-          .saveAsTable(sT)
-      } finally rows.unpersist()
+        val buckets =
+          BucketedTable.derivedBuckets(extracted.count(), targetRowsPerBucket)
+        BucketedTable.write(extracted, rows(tag), buckets)
+        // Counts derive from the stored rows (one explode pass total),
+        // bucket-local over the sh-bucketed rows table.
+        BucketedTable.writeAligned(exactCounts(spark, tag), counts(tag), buckets)
+      } finally extracted.unpersist()
+    }) {
       // Build-time audit (the band index's hot-bucket convention): how
       // much of the span space the MinDocs threshold marks as
       // duplicated — a corpus where most spans are shared is boilerplate
@@ -153,6 +139,12 @@ object SpanSet {
     }
     (spark.table(rT), spark.table(sT))
   }
+
+  /** One exact count row per fingerprint, aggregated off the stored
+    * sh-bucketed rows — bucket-local, no shuffle.
+    */
+  private def exactCounts(spark: SparkSession, tag: String): DataFrame =
+    spark.table(rowsT(tag)).groupBy("sh").agg(count(lit(1)).as("nd"))
 
   /** Total count per fingerprint off the stored table: the delta-merge
     * read (see class doc). `sum` over however many delta rows each `sh`
@@ -206,18 +198,17 @@ object SpanSet {
 
   private def appendWith(spark: SparkSession, newDocs: DataFrame, tag: String,
                          extractor: DataFrame => DataFrame): Unit = {
-    val (rT, sT) = (rowsT(tag), setT(tag))
-    require(spark.catalog.tableExists(rT) && spark.catalog.tableExists(sT),
-      s"append target $tag does not exist — buildOrLoad first")
-    val rows = extractor(newDocs)
+    BucketedTable.requireBuilt(spark, "append", tag, rowsT(tag), setT(tag))
+    val extracted = extractor(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      rows.write.insertInto(rT)
-      rows.groupBy("sh").agg(count(lit(1)).as("nd")).write.insertInto(sT)
-    } finally rows.unpersist()
+      BucketedTable.insert(spark, extracted, rows(tag))
+      BucketedTable.insert(spark,
+        extracted.groupBy("sh").agg(count(lit(1)).as("nd")), counts(tag))
+    } finally extracted.unpersist()
   }
 
-  /** Takedown maintenance (r15 verdict #1): remove every span row of
+  /** Takedown maintenance: remove every span row of
     * `docIds` and insert the deleted rows' per-fingerprint counts as
     * NEGATIVE sum-lattice delta rows — the count lattice that makes
     * appends exact-on-read absorbs deletions the same way, so this is
@@ -237,34 +228,24 @@ object SpanSet {
     */
   def delete(spark: SparkSession, docIds: DataFrame,
              tag: String): (Long, Long) = {
-    val (rT, sT) = (rowsT(tag), setT(tag))
-    require(spark.catalog.tableExists(rT) && spark.catalog.tableExists(sT),
-      s"delete target $tag does not exist — buildOrLoad first")
-    val ids = broadcast(docIds.select(col("doc_id")).distinct())
-    val rows = spark.table(rT)
-    val gone = rows.join(ids, Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val removed = gone.count()
-      if (removed == 0L) return (0L, 0L)
+    val sT = setT(tag)
+    BucketedTable.requireBuilt(spark, "delete", tag, rowsT(tag), sT)
+    var nNegs = 0L
+    val Seq(removed) = BucketedTable.deleteKeyed(spark, docIds, "doc_id",
+        Seq(rows(tag)), reconcile = Some { case Seq(gone) =>
       // negated per-fingerprint counts of the deleted rows, staged
       // BEFORE the rows rewrite (they derive from the table being
       // rewritten)
       val stagedNegs = gone.groupBy("sh")
         .agg((-count(lit(1))).as("nd"))
         .localCheckpoint()
-      val nNegs = stagedNegs.count()
-      val stagedRows = rows.join(ids, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      val buckets = BandIndex.bucketsOf(spark, rT)
-      stagedRows.write.mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "sh").sortBy("sh")
-        .saveAsTable(rT)
-      stagedNegs.select(col("sh"), col("nd")).write.insertInto(sT)
-      spark.catalog.refreshTable(rT)
-      spark.catalog.refreshTable(sT)
-      (removed, nNegs)
-    } finally gone.unpersist()
+      nNegs = stagedNegs.count()
+      () => {
+        stagedNegs.select(col("sh"), col("nd")).write.insertInto(sT)
+        spark.catalog.refreshTable(sT)
+      }
+    })
+    (removed, nNegs)
   }
 
   /** Periodic compaction: fold the accumulated delta rows back to one
@@ -274,11 +255,8 @@ object SpanSet {
     * no shuffle.
     */
   def refreshSpanCounts(spark: SparkSession, tag: String): Unit =
-    spark.table(rowsT(tag)).groupBy("sh")
-      .agg(count(lit(1)).as("nd"))
-      .write.mode(SaveMode.Overwrite)
-      // rows-table spec, NOT a fresh derivation: the family invariant
-      // is equal sh bucketing across both tables
-      .bucketBy(BandIndex.bucketsOf(spark, rowsT(tag)), "sh").sortBy("sh")
-      .saveAsTable(setT(tag))
+    // rows-table spec, NOT a fresh derivation: the family invariant is
+    // equal sh bucketing across both tables
+    BucketedTable.writeAligned(exactCounts(spark, tag), counts(tag),
+      BucketedTable.bucketsOf(spark, rowsT(tag)))
 }

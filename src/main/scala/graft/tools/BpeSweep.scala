@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.ops.{BandIndex, BpeStore}
+import graft.ops.{BpeStore, BucketedTable}
 
 /** The PRODUCTION merge-budget point, measured THROUGH THE STORE (r13
   * verdict #7): [[BpeScale]] already proves the 500-merge learn curve
@@ -53,7 +53,7 @@ object BpeSweep {
     def f6(d: Double) =
       String.format(java.util.Locale.ROOT, "%.6f", Double.box(d))
     val rows = budgets.map { b =>
-      val tag = BandIndex.tag(s"$dir#sweep", s"bpe$b")
+      val tag = BucketedTable.tag(s"$dir#sweep", s"bpe$b")
       val t0 = System.nanoTime()
       val (merges, segs) = BpeStore.buildOrLoad(spark, docs, tag,
         numMerges = b)

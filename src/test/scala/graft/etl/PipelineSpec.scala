@@ -109,7 +109,7 @@ class PipelineSpec extends SparkSpec {
     // ...the stored tables exist under the tags the query paths and
     // streaming probes derive for the corpus dir (a privately-tagged
     // copy would never be read — the r6 ADVICE finding)...
-    val bandTag = graft.ops.BandIndex.tag(dst, "full")
+    val bandTag = graft.ops.BucketedTable.tag(dst, "full")
     val spanTag = graft.ops.SpanSet.tag(dst)
     assert(spark.table(s"${bandTag}_bands").count() > 0)
     assert(graft.ops.SpanSet.duplicatedSpans(spark, spanTag).count() == 9)
@@ -214,7 +214,7 @@ class PipelineSpec extends SparkSpec {
     assert(rows.find(_.kind == "delete_pq_store").get
       .detail.contains("code_rows_removed=2"))
     // the serving surfaces no longer know the ids
-    val bandTag = graft.ops.BandIndex.tag(dst, "full")
+    val bandTag = graft.ops.BucketedTable.tag(dst, "full")
     assert(spark.table(s"${bandTag}_shingles")
       .filter(org.apache.spark.sql.functions.col("doc_id").isin(2L, 3L))
       .count() == 0)
@@ -306,7 +306,7 @@ class PipelineSpec extends SparkSpec {
         .matches(".*path=(partial|full) .*threshold=1\\.00.*")),
       rows.map(_.detail).mkString("; "))
     // stored level columns are exact after the policy ran
-    val bandTag = graft.ops.BandIndex.tag(dst, "full")
+    val bandTag = graft.ops.BucketedTable.tag(dst, "full")
     val b = spark.table(s"${bandTag}_bands")
     val bTruth = b.groupBy("band", "bh").agg(F.count(F.lit(1)).as("x"))
       .withColumnRenamed("band", "b2").withColumnRenamed("bh", "h2")

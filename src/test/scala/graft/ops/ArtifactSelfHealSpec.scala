@@ -43,7 +43,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("BandIndex self-heals from either table missing") {
-    val tag = BandIndex.tag("/tmp/selfheal", "minhash")
+    val tag = BucketedTable.tag("/tmp/selfheal", "minhash")
     heals(Seq(s"${tag}_shingles", s"${tag}_bands"), () => {
       val (sh, bd) = BandIndex.buildOrLoad(spark, docs, tag)
       Seq(sh, bd)
@@ -51,7 +51,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("SpanSet self-heals from either table missing") {
-    val tag = BandIndex.tag("/tmp/selfheal", "spans")
+    val tag = BucketedTable.tag("/tmp/selfheal", "spans")
     heals(Seq(s"${tag}_spanrows", s"${tag}_spanset"), () => {
       val (r, s) = SpanSet.buildOrLoad(spark, docs, tag)
       Seq(r, s)
@@ -59,7 +59,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("ContainIndex self-heals from either table missing") {
-    val tag = BandIndex.tag("/tmp/selfheal", "contain")
+    val tag = BucketedTable.tag("/tmp/selfheal", "contain")
     heals(Seq(s"${tag}_cngrams", s"${tag}_cdocs"), () => {
       val (p, d) = ContainIndex.buildOrLoad(spark, docs, tag)
       Seq(p, d)
@@ -67,7 +67,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("MediaSigStore self-heals from either table missing") {
-    val tag = BandIndex.tag("/tmp/selfheal", "imgsig")
+    val tag = BucketedTable.tag("/tmp/selfheal", "imgsig")
     heals(Seq(s"${tag}_msig", s"${tag}_mband"), () => {
       val (s, b) = MediaSigStore.buildOrLoad(spark, docs, tag,
         ImageDedup.dhashSigs)
@@ -78,7 +78,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   test("MediaSigStore self-heals from SCHEMA DRIFT: a pre-cap mband " +
     "vintage (no bsz column) rebuilds instead of breaking every " +
     "capped read path") {
-    val tag = BandIndex.tag("/tmp/selfheal", "imgsigdrift")
+    val tag = BucketedTable.tag("/tmp/selfheal", "imgsigdrift")
     val (sT, bT) = (s"${tag}_msig", s"${tag}_mband")
     Seq(sT, bT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     MediaSigStore.buildOrLoad(spark, docs, tag, ImageDedup.dhashSigs)
@@ -101,7 +101,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
     "BandIndex vintage reads as ABSENT — the maintenance gate routes " +
     "to buildOrLoad's self-heal instead of a mid-verb missing-column " +
     "AnalysisException") {
-    val tag = BandIndex.tag("/tmp/selfheal", "minhashvintage")
+    val tag = BucketedTable.tag("/tmp/selfheal", "minhashvintage")
     val (shT, bdT) = (s"${tag}_shingles", s"${tag}_bands")
     Seq(shT, bdT, s"${tag}_btouched")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -126,7 +126,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("vintage-aware exists covers LexIndex's pb mirror the same way") {
-    val tag = BandIndex.tag("/tmp/selfheal", "lexvintage")
+    val tag = BucketedTable.tag("/tmp/selfheal", "lexvintage")
     val (pT, sT) = (s"${tag}_lpost", s"${tag}_lstats")
     Seq(pT, sT, s"${tag}_ltouched")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -149,7 +149,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("ChunkStore (single table) self-heals from an external drop") {
-    val tag = BandIndex.tag("/tmp/selfheal", "chunks")
+    val tag = BucketedTable.tag("/tmp/selfheal", "chunks")
     heals(Seq(s"${tag}_chunks"),
       () => Seq(ChunkStore.buildOrLoad(spark, docs, tag)))
   }
@@ -173,7 +173,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("LexIndex self-heals from either table missing") {
-    val tag = BandIndex.tag("/tmp/selfheal", "lex")
+    val tag = BucketedTable.tag("/tmp/selfheal", "lex")
     heals(Seq(s"${tag}_lpost", s"${tag}_lstats"), () => {
       val (p, s) = LexIndex.buildOrLoad(spark, docs, tag)
       Seq(p, s)
@@ -181,7 +181,7 @@ class ArtifactSelfHealSpec extends SparkSpec {
   }
 
   test("BpeStore self-heals from either table missing") {
-    val tag = BandIndex.tag("/tmp/selfheal", "bpe")
+    val tag = BucketedTable.tag("/tmp/selfheal", "bpe")
     heals(Seq(s"${tag}_bpemerges", s"${tag}_bpesegs"), () => {
       val (m, sg) = BpeStore.buildOrLoad(spark, docs, tag)
       Seq(m, sg)

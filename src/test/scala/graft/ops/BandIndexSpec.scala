@@ -120,14 +120,14 @@ class BandIndexSpec extends SparkSpec {
 
   test("bucket derivation: ceil(rows/target) to a power of two, floored " +
     "at 8 — local corpora stay at the floor, 100 TB row counts do not") {
-    assert(BandIndex.derivedBuckets(0L) == 8)
-    assert(BandIndex.derivedBuckets(1000L) == 8) // local scale -> floor
-    assert(BandIndex.derivedBuckets(33L * 1024 * 1024) == 16)
-    assert(BandIndex.derivedBuckets(100L, targetRows = 10L) == 16)
-    assert(BandIndex.derivedBuckets(100L, targetRows = 1L) == 128)
+    assert(BucketedTable.derivedBuckets(0L) == 8)
+    assert(BucketedTable.derivedBuckets(1000L) == 8) // local scale -> floor
+    assert(BucketedTable.derivedBuckets(33L * 1024 * 1024) == 16)
+    assert(BucketedTable.derivedBuckets(100L, targetRows = 10L) == 16)
+    assert(BucketedTable.derivedBuckets(100L, targetRows = 1L) == 128)
     // ~10^12 span rows (a 100 TB corpus's token stream) at the default
     // target: 2^18 buckets, each holding ~4M rows
-    assert(BandIndex.derivedBuckets(1000000000000L) == 262144)
+    assert(BucketedTable.derivedBuckets(1000000000000L) == 262144)
   }
 
   test("build derives bucket counts from the rows relation: a non-floor " +
@@ -145,7 +145,7 @@ class BandIndexSpec extends SparkSpec {
     // 40 rows at 2/bucket -> want 20 -> 32; floor build stays at 8
     assert(BandIndex.buckets(spark, tagD) == 32,
       s"got ${BandIndex.buckets(spark, tagD)}")
-    assert(BandIndex.bucketsOf(spark, s"${tagD}_shingles") == 32)
+    assert(BucketedTable.bucketsOf(spark, s"${tagD}_shingles") == 32)
     assert(BandIndex.buckets(spark, tagF) == 8)
     // bucketing is layout, not semantics: both builds hold identical
     // CONTENT rows (pbk is layout — it mirrors the bucket count, so it

@@ -23,7 +23,7 @@ class BpeStoreSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
 
   private def freshTag(role: String) =
-    BandIndex.tag(s"/tmp/bpestore_${role}_${System.nanoTime()}", "bpe")
+    BucketedTable.tag(s"/tmp/bpestore_${role}_${System.nanoTime()}", "bpe")
 
   test("stored tables == learnAndApply output (merges AND segmentations)") {
     // "ab" x3 + "abab": merges (a,b) then (ab,ab) then exhaustion at
@@ -109,8 +109,8 @@ class BpeStoreSpec extends SparkSpec {
     // learns (ab,ab) and more — segmentations must differ per tag
     val docs = corpus((1L, "abab abab abab abab abcd"))
     val base = s"/tmp/bpesweep_${System.nanoTime()}"
-    val tag1 = BandIndex.tag(base, "bpe1")
-    val tag3 = BandIndex.tag(base, "bpe3")
+    val tag1 = BucketedTable.tag(base, "bpe1")
+    val tag3 = BucketedTable.tag(base, "bpe3")
     assert(tag1 != tag3, "budget must be part of the tag")
     val (m1, s1) = BpeStore.buildOrLoad(spark, docs, tag1, numMerges = 1)
     val (m3, s3) = BpeStore.buildOrLoad(spark, docs, tag3, numMerges = 3)

@@ -66,8 +66,8 @@ class ChunkStoreSpec extends SparkSpec {
     // 6 rows at 1/bucket -> floor 8; at the default target also 8 — pin
     // the derivation with a direct call instead of a giant corpus
     assert(ChunkStore.buckets(spark, tagF) == 8)
-    assert(BandIndex.derivedBuckets(6L, 1L) == 8)
-    assert(BandIndex.derivedBuckets(600L, 1L) == 1024)
+    assert(BucketedTable.derivedBuckets(6L, 1L) == 8)
+    assert(BucketedTable.derivedBuckets(600L, 1L) == 1024)
     drop(tagI); drop(tagF)
   }
 

@@ -26,7 +26,7 @@ class LexIndexSpec extends SparkSpec {
   private var tagN = 0
   private def freshTag(role: String): String = {
     tagN += 1
-    BandIndex.tag(s"/tmp/lexspec$tagN", role)
+    BucketedTable.tag(s"/tmp/lexspec$tagN", role)
   }
 
   private def dropAll(tag: String): Unit =

@@ -19,8 +19,8 @@ class PassageSpec extends SparkSpec {
   private var tagN = 0
   private def freshTags(): (String, String) = {
     tagN += 1
-    val tagC = BandIndex.tag(s"/tmp/passspec$tagN", "chunks")
-    val tagP = BandIndex.tag(s"/tmp/passspec$tagN", "plex")
+    val tagC = BucketedTable.tag(s"/tmp/passspec$tagN", "chunks")
+    val tagP = BucketedTable.tag(s"/tmp/passspec$tagN", "plex")
     (ChunkStore.tables(tagC) ++ LexIndex.tables(tagP)).foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
     (tagC, tagP)
@@ -28,7 +28,7 @@ class PassageSpec extends SparkSpec {
 
   private def freshLexTag(): String = {
     tagN += 1
-    val tag = BandIndex.tag(s"/tmp/passspecd$tagN", "lex")
+    val tag = BucketedTable.tag(s"/tmp/passspecd$tagN", "lex")
     LexIndex.tables(tag).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     tag
   }
@@ -62,9 +62,9 @@ class PassageSpec extends SparkSpec {
   private def freshFusionTags(): (String, String, String) = {
     tagN += 1
     val base = s"/tmp/passfuse$tagN"
-    val tagC = BandIndex.tag(base, "chunks")
-    val tagP = BandIndex.tag(base, "plex")
-    val tagV = BandIndex.tag(base, "pvec")
+    val tagC = BucketedTable.tag(base, "chunks")
+    val tagP = BucketedTable.tag(base, "plex")
+    val tagV = BucketedTable.tag(base, "pvec")
     (ChunkStore.tables(tagC) ++ LexIndex.tables(tagP)).foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
     spark.catalog.listTables().collect().map(_.name)

@@ -15,7 +15,7 @@ class ProximitySpec extends SparkSpec {
   private var tagN = 0
   private def freshTag(): String = {
     tagN += 1
-    val tag = BandIndex.tag(s"/tmp/proxspec$tagN", "lex")
+    val tag = BucketedTable.tag(s"/tmp/proxspec$tagN", "lex")
     Seq(s"${tag}_lpost", s"${tag}_lstats", s"${tag}_ltouched").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
     tag

@@ -16,7 +16,7 @@ class QlSpec extends SparkSpec {
   private var tagN = 0
   private def freshTag(): String = {
     tagN += 1
-    val tag = BandIndex.tag(s"/tmp/qlspec$tagN", "lex")
+    val tag = BucketedTable.tag(s"/tmp/qlspec$tagN", "lex")
     Seq(s"${tag}_lpost", s"${tag}_lstats", s"${tag}_ltouched").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
     tag

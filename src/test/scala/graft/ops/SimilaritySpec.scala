@@ -311,7 +311,7 @@ class SimilaritySpec extends SparkSpec {
       q.toLong -> Set(100L + q, 200L + q)).toMap
     // LEXICAL stack: the real LexIndex serving path (scorePanel via
     // lexPanelTop — the q_hybrid_fusion leg verbatim)
-    val tag = BandIndex.tag("/tmp/fuselift", "lex")
+    val tag = BucketedTable.tag("/tmp/fuselift", "lex")
     Seq(s"${tag}_lpost", s"${tag}_lstats", s"${tag}_ltouched").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
     val (post, stats) = LexIndex.buildOrLoad(spark, docs, tag)

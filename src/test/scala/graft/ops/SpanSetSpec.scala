@@ -112,12 +112,12 @@ class SpanSetSpec extends SparkSpec {
       docs(1L -> sharedA, 2L -> sharedB, 3L -> lonely), tag,
       targetRowsPerBucket = 1L)
     assert(SpanSet.buckets(spark, tag) == 16)
-    assert(graft.ops.BandIndex.bucketsOf(spark, s"${tag}_spanset") == 16,
+    assert(graft.ops.BucketedTable.bucketsOf(spark, s"${tag}_spanset") == 16,
       "family invariant: both tables bucket sh identically")
     // answers match the floor-bucketed build semantics
     assert(SpanSet.duplicatedSpans(spark, tag).count() == 2)
     SpanSet.refreshSpanCounts(spark, tag)
-    assert(graft.ops.BandIndex.bucketsOf(spark, s"${tag}_spanset") == 16)
+    assert(graft.ops.BucketedTable.bucketsOf(spark, s"${tag}_spanset") == 16)
     assert(SpanSet.duplicatedSpans(spark, tag).count() == 2)
     dropAll(tag)
   }

@@ -33,7 +33,7 @@ class TakedownAuditSpec extends SparkSpec {
     // (deleted postings are gone from the only table the scorer scans)
     val sub = Tables.t(spark, dir, "documents")
       .filter(col("doc_id") % 5 === 0)
-    val tagL = BandIndex.tag(dir, "tdlex")
+    val tagL = BucketedTable.tag(dir, "tdlex")
     val (post, stats) = LexIndex.buildOrLoad(spark, sub, tagL)
     val served = LexIndex.scoreTerms(post, stats, CorpusQueries.Bm25Terms)
       .filter(col("doc_id") % 20 === 0)

@@ -364,7 +364,7 @@ class CorpusStreamSpec extends SparkSpec {
     // learn + store the tokenizer on a standing corpus, then stream new
     // docs of the SAME vocabulary through the encode face
     val standing = Seq((1L, "ab ab ab abab cd")).toDF("doc_id", "text")
-    val tag = graft.ops.BandIndex.tag(
+    val tag = graft.ops.BucketedTable.tag(
       s"/tmp/bpestream_${System.nanoTime()}", "bpe")
     val (_, segs) = graft.ops.BpeStore.buildOrLoad(spark, standing, tag)
     val docs = Seq(
@@ -420,7 +420,7 @@ class CorpusStreamSpec extends SparkSpec {
       (3L, "join me tomorrow for the query tuning session ok"),
       (4L, "totally unrelated words live here peacefully forever"))
       .toDF("doc_id", "text")
-    val tag = graft.ops.BandIndex.tag(
+    val tag = graft.ops.BucketedTable.tag(
       s"/tmp/lexstream_${System.nanoTime()}", "lex")
     val (post, stats) = graft.ops.LexIndex.buildOrLoad(spark, standing, tag)
     val terms = graft.ops.CorpusQueries.Bm25Terms
@@ -550,7 +550,7 @@ class CorpusStreamSpec extends SparkSpec {
       (3L, "join me tomorrow for the query tuning session ok"),
       (4L, "totally unrelated words live here peacefully forever"))
       .toDF("doc_id", "text")
-    val tag = graft.ops.BandIndex.tag(
+    val tag = graft.ops.BucketedTable.tag(
       s"/tmp/qlstream_${System.nanoTime()}", "lex")
     graft.ops.LexIndex.buildOrLoad(spark, standing, tag)
     val terms = graft.ops.CorpusQueries.Bm25Terms
@@ -635,8 +635,8 @@ class CorpusStreamSpec extends SparkSpec {
       (13L, "fresh words only in this one"),
       (14L, "spark and join appear together finally"))
     val n = System.nanoTime()
-    val tagS = graft.ops.BandIndex.tag(s"/tmp/lexapp_s$n", "lex")
-    val tagB = graft.ops.BandIndex.tag(s"/tmp/lexapp_b$n", "lex")
+    val tagS = graft.ops.BucketedTable.tag(s"/tmp/lexapp_s$n", "lex")
+    val tagB = graft.ops.BucketedTable.tag(s"/tmp/lexapp_b$n", "lex")
     graft.ops.LexIndex.buildOrLoad(spark, standing.toDF("doc_id", "text"), tagS)
     graft.ops.LexIndex.buildOrLoad(spark, standing.toDF("doc_id", "text"), tagB)
     // reference: ONE batch append of all four arriving docs
@@ -701,12 +701,12 @@ class CorpusStreamSpec extends SparkSpec {
       (6L, "fresh words only in this one"))
     val victims = Seq(2L, 3L, 5L, 6L)
     val n = System.nanoTime()
-    val tagS = graft.ops.BandIndex.tag(s"/tmp/lexdel_s$n", "lex")
-    val tagB = graft.ops.BandIndex.tag(s"/tmp/lexdel_b$n", "lex")
+    val tagS = graft.ops.BucketedTable.tag(s"/tmp/lexdel_s$n", "lex")
+    val tagB = graft.ops.BucketedTable.tag(s"/tmp/lexdel_b$n", "lex")
     graft.ops.LexIndex.buildOrLoad(spark, corpus.toDF("doc_id", "text"), tagS)
     graft.ops.LexIndex.buildOrLoad(spark, corpus.toDF("doc_id", "text"), tagB)
-    val bTagS = graft.ops.BandIndex.tag(s"/tmp/banddel_s$n", "full")
-    val bTagB = graft.ops.BandIndex.tag(s"/tmp/banddel_b$n", "full")
+    val bTagS = graft.ops.BucketedTable.tag(s"/tmp/banddel_s$n", "full")
+    val bTagB = graft.ops.BucketedTable.tag(s"/tmp/banddel_b$n", "full")
     graft.ops.BandIndex.buildOrLoad(spark, corpus.toDF("doc_id", "text"), bTagS)
     graft.ops.BandIndex.buildOrLoad(spark, corpus.toDF("doc_id", "text"), bTagB)
     // reference: ONE batch delete of all four ids on both families
@@ -766,8 +766,8 @@ class CorpusStreamSpec extends SparkSpec {
       (2L, "spark join query on one short doc right here"),
       (3L, (1 to 40).map(i => s"zz$i").mkString(" ")))
     val n = System.nanoTime()
-    val tagC = graft.ops.BandIndex.tag(s"/tmp/passb$n", "chunks")
-    val tagP = graft.ops.BandIndex.tag(s"/tmp/passb$n", "plex")
+    val tagC = graft.ops.BucketedTable.tag(s"/tmp/passb$n", "chunks")
+    val tagP = graft.ops.BucketedTable.tag(s"/tmp/passb$n", "plex")
     val stored = graft.ops.CorpusQueries.passageRetrieval(spark,
         corpus.toDF("doc_id", "text"), tagC, tagP, terms)
       .select("doc_id", "chunk_idx", "score")
@@ -832,12 +832,12 @@ class CorpusStreamSpec extends SparkSpec {
       (6L, "fresh words only in this one document right now"))
     val victims = Seq(2L, 3L, 6L)
     val n = System.nanoTime()
-    val (cTagS, cTagB) = (graft.ops.BandIndex.tag(s"/tmp/cdel_s$n", "c"),
-      graft.ops.BandIndex.tag(s"/tmp/cdel_b$n", "c"))
-    val (kTagS, kTagB) = (graft.ops.BandIndex.tag(s"/tmp/kdel_s$n", "chunks"),
-      graft.ops.BandIndex.tag(s"/tmp/kdel_b$n", "chunks"))
-    val (sTagS, sTagB) = (graft.ops.BandIndex.tag(s"/tmp/sdel_s$n", "spans"),
-      graft.ops.BandIndex.tag(s"/tmp/sdel_b$n", "spans"))
+    val (cTagS, cTagB) = (graft.ops.BucketedTable.tag(s"/tmp/cdel_s$n", "c"),
+      graft.ops.BucketedTable.tag(s"/tmp/cdel_b$n", "c"))
+    val (kTagS, kTagB) = (graft.ops.BucketedTable.tag(s"/tmp/kdel_s$n", "chunks"),
+      graft.ops.BucketedTable.tag(s"/tmp/kdel_b$n", "chunks"))
+    val (sTagS, sTagB) = (graft.ops.BucketedTable.tag(s"/tmp/sdel_s$n", "spans"),
+      graft.ops.BucketedTable.tag(s"/tmp/sdel_b$n", "spans"))
     val docs = corpus.map { case (id, t) => (id, t, s"s${id % 2}") }
       .toDF("doc_id", "text", "source")
     for (t <- Seq(cTagS, cTagB)) graft.ops.ContainIndex.buildOrLoad(spark, docs, t)
